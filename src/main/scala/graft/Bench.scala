@@ -1,9 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // median-of-N per query (fixed per-query back-to-back repeats) so ambient
     // machine noise can't masquerade as a plan change round-over-round; the
     // r6 bench showed ~1.2x uniform inflation that hid a real optimization
@@ -16,47 +14,10 @@ object Bench {
     // coalescing is the right call for this bench's shape at every SF.
     // (also measured: AQE fully OFF = +35% on the same subset — the runtime
     // coalescing pays for its replanning many times over; default kept.)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     // one tiny action to pay session/codegen bring-up outside the timings
     spark.range(1000).selectExpr("sum(id)").collect()
-    // e2e_stream_agg is a correctness-gate streaming REPLAY (fixture render +
-    // multi-microbatch run, ~30 s of trigger/checkpoint overhead independent
-    // of data size) — it would swamp the query-throughput totals the bench
-    // tracks round-over-round. Verify covers it; StreamBench measures
-    // streaming throughput properly.
-    // o6_compact_files likewise: it is a store-maintenance round trip (two
-    // upserts + compact + FS listing), not a query.
-    // o10_version_history likewise (two upserts + full-history read), and
-    // s4/s5 (full on-disk index builds + maintenance passes + search —
-    // index-construction round trips, not query throughput; s2 benches the
-    // IVF query plan itself); e2e_neardup is a streaming replay like
-    // e2e_stream_agg.
-    // j8_bucketed_join likewise: it rewrites both sides as bucketed tables
-    // before the (shuffle-free) join — a write-once round trip, not a query.
-    // o24_time_travel: three upserts + an as-of read — store maintenance
-    // like o10, not query throughput.
-    val skip = Set("e2e_stream_agg", "e2e_late_drop", "e2e_stream_join",
-      "e2e_session", "e2e_cdc", "e2e_view_maintain", "e2e_kmv_sketch",
-      "e2e_tws_profile", "e2e_stream_outer_join", "e2e_stream_enrich",
-      "e2e_stream_dedup", "e2e_stream_dedup_ooo", "e2e_hysteresis",
-      "e2e_idle", "e2e_vacuum",
-      "o6_compact_files",
-      "o21_zorder_skip",
-      "o10_version_history", "o24_time_travel", "o25_retention",
-      "o31_cdc_apply",
-      "s4_ivf_index_search",
-      "s5_ivf_reassign", "e2e_neardup", "s7d_pq_index_search",
-      // s7e trains the PQ codebook (3 Lloyd passes) twice-encodes and
-      // double-ADCs the corpus — a training round trip like s4/s5/s7d,
-      // not query throughput
-      "s7e_pq_trained_recall",
-      "s16_mips_index", "j8_bucketed_join")
     // SPARK_GRAFT_ONLY=a,b,c — local iteration on a subset; unset for the
     // driver's full run
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -71,7 +32,7 @@ object Bench {
       if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
     }
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot(q => skip(q._1) || maintOnly)
+      .filterNot(q => SparkEntry.maintenance(q._1) || maintOnly)
       .filter(q => only.forall(_.contains(q._1))).map { case (name, fn) =>
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
@@ -95,7 +56,7 @@ object Bench {
       System.err.println(f"[bench] done $name $med%.3f")
       (name, med, spread)
     }
-    // The skip set above is excluded from query THROUGHPUT, but those
+    // SparkEntry.maintenance is excluded from query THROUGHPUT, but those
     // replay/maintenance round trips (streaming pipeline, on-disk IVF index,
     // store compaction) previously had NO regression tracking at all — a 5x
     // slowdown in StreamNearDup or IvfIndex.search was invisible to the
@@ -106,7 +67,7 @@ object Bench {
     // SPARK_GRAFT_ONLY local iteration.
     val maintenance =
       if (only.isDefined && !maintOnly) Seq.empty
-      else SparkEntry.queries.toSeq.sortBy(_._1).filter(q => skip(q._1))
+      else SparkEntry.queries.toSeq.sortBy(_._1).filter(q => SparkEntry.maintenance(q._1))
         .filter(q => only.forall(_.contains(q._1))).map {
         case (name, fn) =>
           val t0 = System.nanoTime()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan observability: print the formatted physical plan of selected
   * `SparkEntry.queries` entries without executing them — the iterate-on-
   * the-plan loop ("explain until it's the plan you'd want, not the first
@@ -18,15 +16,9 @@ object Explain {
     // not the explain default 4). SPARK_GRAFT_MAXPB: scan split size — on
     // ScaleGen's multi-file layout a small cap stands in for the many-
     // hundreds-of-splits scans a real 100 TB table supplies.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAXPB", "134217728"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    spark.conf.set("spark.sql.files.maxPartitionBytes",
+      sys.env.getOrElse("SPARK_GRAFT_MAXPB", "134217728"))
     spark.sparkContext.setLogLevel("ERROR")
     for ((n, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
          if names.forall(_.contains(n))) {

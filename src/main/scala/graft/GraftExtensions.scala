@@ -9,9 +9,8 @@ import graft.expressions.{CosineSimilarity, MinKDistinctLongs, NfcNormalize,
 /** SparkSessionExtensions entry point: exposes the engine's native
   * expressions to SQL users.
   *
-  * Install with either
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.GraftExtensions`. The DataFrame API
+  * Install with either `.withExtensions(new GraftExtensions)` on the
+  * session builder or `--conf spark.sql.extensions=graft.GraftExtensions`. The DataFrame API
   * ([[graft.expressions.VectorExpressions]]) works without installation.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -113,12 +112,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         requireArity("jaro_winkler", exprs, 2)
         graft.expressions.JaroWinkler(exprs.head, exprs(1))
       }))
-    // optimizer tier: the unbounded-buffer top-k idiom rewrites to the
-    // bounded aggregate automatically (see BoundedTopKRewrite's contract)
-    e.injectOptimizerRule(_ => graft.plans.BoundedTopKRewrite)
-    // COUNT(DISTINCT x) used only as a cardinality guard rewrites to
-    // min/max comparisons — no Expand, no second shuffle (the q28 lesson
-    // as an automatic rule; see DistinctGuardRewrite's contract)
-    e.injectOptimizerRule(_ => graft.plans.DistinctGuardRewrite)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Scale-sweep data generator: replicates the driver's sf0.1 tables R times
@@ -44,12 +44,8 @@ object ScaleGen {
     // cross-replica dup pairs and quadratic LSH growth — the exact artifact
     // this generator exists to avoid.
     require(reps <= 312, s"SPARK_GRAFT_REPL=$reps > 312 exhausts the affine cipher family")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     spark.sparkContext.setLogLevel("WARN")
     // events.ts encoding varies across testdata generations (TIMESTAMP(NANOS),
     // timestamp[us] NTZ/UTC). Surface legacy nanos as a raw long and copy

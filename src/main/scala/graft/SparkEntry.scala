@@ -272,8 +272,8 @@ object SparkEntry {
     * ≡ offset mod stride), satisfying the groupCentroidsByTop contract. The
     * 8× ratio is the bench-scale stand-in for sqrt(nlist): what matters is
     * that BOTH tiers stay broadcast-small while the full centroid relation
-    * flows through the shuffle join (see graft.AssignSweep for the
-    * cost-vs-nlist evidence). */
+    * flows through the shuffle join (see the AssignSweep evidence in
+    * docs/PLANS.md for cost vs nlist). */
   private def ivfCentroidSets(e: DataFrame, stride: Long,
                               offset: Long = 0L): (DataFrame, DataFrame) = {
     val cent = e.filter(col("vec_id") % stride === offset)
@@ -312,6 +312,26 @@ object SparkEntry {
   private def qlSql(q: Double): String =
     s"CASE WHEN target > prediction THEN CAST('$q' AS DOUBLE) * (target - prediction) " +
       s"ELSE CAST('${1.0 - q}' AS DOUBLE) * (prediction - target) END"
+
+  /** The keys of [[queries]] that are round trips rather than queries:
+    * streaming replays (fixture render + multi-micro-batch run, dominated
+    * by trigger/checkpoint overhead independent of data size), store
+    * maintenance (upserts + compaction / history / retention + listing,
+    * write-once bucketing), and on-disk index or codebook builds. Bench
+    * times them once under "maintenance", outside query throughput. */
+  val maintenance: Set[String] = Set(
+    // streaming replays
+    "e2e_stream_agg", "e2e_late_drop", "e2e_stream_join", "e2e_session",
+    "e2e_cdc", "e2e_view_maintain", "e2e_kmv_sketch", "e2e_tws_profile",
+    "e2e_stream_outer_join", "e2e_stream_enrich", "e2e_stream_dedup",
+    "e2e_stream_dedup_ooo", "e2e_hysteresis", "e2e_idle", "e2e_vacuum",
+    "e2e_neardup",
+    // store maintenance
+    "o6_compact_files", "o21_zorder_skip", "o10_version_history",
+    "o24_time_travel", "o25_retention", "o31_cdc_apply", "j8_bucketed_join",
+    // index and codebook builds
+    "s4_ivf_index_search", "s5_ivf_reassign", "s7d_pq_index_search",
+    "s7e_pq_trained_recall", "s16_mips_index")
 
   // ---- the queries ------------------------------------------------------
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -5684,7 +5704,7 @@ object SparkEntry {
       val init = e.filter(col("vec_id") % Adaptive.centroidStride(e.count()) === 0)
         .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid_vec"))
       SimilarityOps.kmeansRefine(e, init, "vec_id", "embedding", iters = 2,
-          dims = PqM * PqSubDim) // emb fixture width — fixed 64
+          dims = EmbDim)
         .select(col("centroid_id"), col("n"),
           concat_ws(",", transform(col("centroid_vec"),
             x => format_string("%.4f", x))).as("centroid_enc"))
@@ -5700,7 +5720,7 @@ object SparkEntry {
       val init = e.filter(col("vec_id") % Adaptive.centroidStride(e.count()) === 0)
         .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid_vec"))
       val trained = SimilarityOps.kmeansRefine(e, init, "vec_id", "embedding",
-          iters = 2, dims = PqM * PqSubDim) // emb fixture width — fixed 64
+          iters = 2, dims = EmbDim)
         .select(col("centroid_id"), col("centroid_vec"))
       SimilarityOps.semDedup(e, trained, "vec_id", "embedding", tau = 0.35)
     }),
@@ -8075,7 +8095,7 @@ object SparkEntry {
       // 3-day chunks (task 3): the sentinel pair sits 2 days past max ts —
       // day 31 → its own chunk 10 past the last data chunk 9, so the
       // sealing discipline is untouched; eviction-vs-arrival only gets
-      // safer with coarser ordered chunks (see writeDayChunkedParquet doc)
+      // safer with coarser ordered chunks (see Replay.writeDayChunked doc)
       graft.streaming.StreamJoin.runLeftOuter(s, ev(s, dir), work,
         daysPerChunk = 3)
     }),
@@ -9317,6 +9337,9 @@ object SparkEntry {
        |  SELECT query_id, neighbor_id, sim, row_number() OVER (
        |    PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
        |  FROM scored) WHERE rank <= 5""".stripMargin
+
+  /** Width of every `embeddings.embedding` vector in the fixture. */
+  private val EmbDim = 64
 
   /** PQ shape: 8 subspaces × 8 dims, codebook seeds at the centroid stride
     * ((32,64] codewords per subspace). Chosen by a measured recall sweep on

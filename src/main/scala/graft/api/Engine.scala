@@ -3,9 +3,8 @@ package graft.api
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.batch.{DeepAR, Forecaster, MinuteAggregate, SeriesETL, SplitSpec}
+import graft.batch.{DeepAR, Forecaster, SplitSpec}
 import graft.monitor.{Alarm, MonitoringJob, ThresholdUpdate}
-import graft.ops.{DedupOps, SimilarityOps, TextOps}
 import graft.store.KeyedParquetTable
 import graft.streaming.{Pipeline, Sinks, SourceAdapters}
 
@@ -86,81 +85,4 @@ case class Engine(spark: SparkSession, warehouse: String,
   /** Post-approval threshold tightening. */
   def nextThreshold(wql: Double, current: Double, rate: Double = 0.5): Double =
     ThresholdUpdate.next(wql, current, rate)
-
-  // ---- LLM-data operators over arbitrary corpora ----------------------
-
-  def exactDedup(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    DedupOps.exact(docs, idCol, textCol)
-
-  def nearDupCandidates(docs: DataFrame, idCol: String, textCol: String,
-                        numHashes: Int = 16, rowsPerBand: Int = 4): DataFrame =
-    DedupOps.lshCandidatePairs(docs, idCol, textCol, numHashes, rowsPerBand)
-
-  def annTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-              vecCol: String, k: Int): DataFrame =
-    SimilarityOps.bruteForceTopK(corpus, queries, idCol, vecCol, k)
-
-  def textQuality(docs: DataFrame, textCol: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    docs.withColumn("n_tokens", TextOps.tokenCount(col(textCol)))
-      .withColumn("quality", TextOps.qualityScore(col(textCol)))
-      .withColumn("lang_pred", TextOps.langIdHeuristic(col(textCol)))
-      .withColumn("fingerprint", TextOps.fingerprint(col(textCol)))
-  }
-
-  /** Canonical doc per near-dup COMPONENT (not per pair — chains A~B~C get
-    * one canonical, see DedupOps.connectedComponents). */
-  def nearDupClusters(docs: DataFrame, idCol: String, textCol: String,
-                      minEstJaccard: Double = 0.5): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    DedupOps.connectedComponents(
-      DedupOps.lshCandidatePairs(docs, idCol, textCol)
-        .filter(col("est_jaccard") >= minEstJaccard))
-  }
-
-  /** Reproducible domain-weighted mixture (see ops.Sampling — never rand()). */
-  def mixtureSample(docs: DataFrame, keyCol: String, domainCol: String,
-                    rates: Map[String, Double]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    graft.ops.Sampling.mixtureSample(docs, col(keyCol), col(domainCol), rates)
-  }
-
-  /** Exactly-k-per-domain deterministic panel (eval sets). */
-  def domainPanel(docs: DataFrame, keyCol: String, domainCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    graft.ops.Sampling.domainPanel(docs, col(keyCol), col(domainCol), k)
-  }
-
-  /** Fixed-budget training-sequence assignment (docs split at boundaries). */
-  def packSequences(docs: DataFrame, orderCol: String, textCol: String,
-                    budgetTokens: Long): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    graft.ops.Packing.sequenceAssignments(docs, Seq(col(orderCol)),
-      TextOps.tokenCount(col(textCol)), budgetTokens)
-  }
-
-  /** BPE-ish subword tokens (plug a trained merge vocabulary in). */
-  def subwordTokens(docs: DataFrame, textCol: String,
-                    merges: Seq[String] = TextOps.defaultMerges): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    docs.withColumn("subword_tokens", TextOps.bpeishTokens(col(textCol), merges))
-  }
-
-  /** Decode media payloads to feature vectors (real BMP/WAV decode built
-    * in; other formats via a custom Decoder). */
-  def mediaFeatures(media: DataFrame,
-                    decoder: graft.ops.Multimodal.Decoder =
-                      new graft.ops.Multimodal.BuiltinDecoder()): DataFrame =
-    graft.ops.Multimodal.decodeFeatures(media, decoder)
-
-  /** Per-key forecast metrics for a FLEET of series (one row per key). */
-  def monitorFleet(series: DataFrame, seriesCol: String, orderCol: String,
-                   forecaster: Forecaster, threshold: Double): DataFrame =
-    MonitoringJob.runFleet(series, seriesCol, orderCol, targetCol,
-      forecaster, threshold, predictionLength)
-
-  /** Cell-partitioned on-disk ANN index under the warehouse (streaming
-    * writer, pruned search, compaction + re-assignment maintenance). */
-  def ivfIndex(centroids: DataFrame, name: String = "ivf"): graft.streaming.IvfIndex =
-    new graft.streaming.IvfIndex(s"$warehouse/$name", centroids)
 }

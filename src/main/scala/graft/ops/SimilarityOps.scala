@@ -287,7 +287,7 @@ object SimilarityOps {
   //
   // Per-row cost: nlist1 + probeTop·(nlist/nlist1) ≈ 2·sqrt(nlist) instead
   // of nlist — FLAT in nlist for fixed nlist1 ratio (sweep-verified, see
-  // graft.AssignSweep). Approximation contract: a vector's candidate set is
+  // docs/PLANS.md). Approximation contract: a vector's candidate set is
   // the centroids of its probeTop nearest top cells; with probeTop = nlist1
   // the candidate set is every centroid and the result is IDENTICAL to the
   // flat assign (same tie-break). With probeTop < nlist1 a vector whose
@@ -618,10 +618,15 @@ object SimilarityOps {
         // fewer rows) and one exchange fewer per iteration. Identical
         // decimal accumulations over identical value sets and the same
         // double division, so the centroids are bit-identical; `n` equals
-        // the per-dim count because every vector carries every dim.
+        // the per-dim count because every vector carries every dim, which
+        // `n` checks in the same pass: a vector of another width fails the
+        // job instead of yielding truncated or null-biased means (`get`
+        // reads out-of-range dims as null, so this check reports it).
         val v = col(vecCol).cast("array<double>")
-        val aggs = count(lit(1)).as("n") +: (0 until dims).map(d =>
-          sum(v(d).cast("decimal(30,10)")).cast("double").as(s"sx$d"))
+        val n = count(when(size(v) === dims, lit(1)).otherwise(raise_error(
+          lit(s"kmeansRefine: a vector's width differs from dims = $dims"))))
+        val aggs = n.as("n") +: (0 until dims).map(d =>
+          sum(get(v, lit(d)).cast("decimal(30,10)")).cast("double").as(s"sx$d"))
         assigned.groupBy(col("centroid_id"))
           .agg(aggs.head, aggs.tail: _*)
           .select(col("centroid_id"),

@@ -266,12 +266,18 @@ class KeyedParquetTable(val path: String, val keyCol: String,
   private def fileSystem(spark: SparkSession) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Hour partition directories. Names starting with `_` or `.` are
+    * skipped as in Spark's partition discovery — a running write's
+    * `_temporary/…` tree is not a partition. */
   private def hourDirs(spark: SparkSession): Seq[Path] = {
     val fs = fileSystem(spark)
     val root = new Path(path)
     def leafDirs(p: Path, depth: Int): Seq[Path] =
       if (depth == 0) Seq(p)
-      else fs.listStatus(p).filter(_.isDirectory).toSeq.flatMap(s => leafDirs(s.getPath, depth - 1))
+      else fs.listStatus(p).toSeq
+        .filter(s => s.isDirectory && !s.getPath.getName.startsWith("_") &&
+          !s.getPath.getName.startsWith("."))
+        .flatMap(s => leafDirs(s.getPath, depth - 1))
     if (!partitioned || !fs.exists(root)) Seq.empty else leafDirs(root, 4)
   }
 

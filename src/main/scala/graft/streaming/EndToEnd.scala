@@ -91,9 +91,9 @@ object EndToEnd {
 
   /** Render `events` into time-ordered envelope fixture files under
     * `dir/data`. Returns the file count. */
-  def writeFixtures(spark: SparkSession, events: DataFrame, dir: String,
-                    envelopesPerFile: Long = EnvelopesPerFile,
-                    lateDelayFiles: Int = 0): Int = {
+  private def writeFixtures(events: DataFrame, dir: String,
+                            envelopesPerFile: Long = EnvelopesPerFile,
+                            lateDelayFiles: Int = 0): Int = {
     val base = events.select(
       md5(col("event_id").cast("string")).as("hash"),
       pmod(col("event_id"), lit(10000)).cast("int").as("fee"),
@@ -129,31 +129,7 @@ object EndToEnd {
         to_json(struct(
           col("detail_type").as("detail-type"),
           struct(col("txs")).as("detail"))).as("value"))
-
-    // one shuffle, one write job: repartition by chunk so each day lands in
-    // exactly one task → one file per chunk=… partition directory
-    val stage = new Path(dir, "_stage")
-    envelopes.repartition(col("chunk"))
-      .write.partitionBy("chunk").text(stage.toString)
-
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val data = new Path(dir, "data")
-    fs.mkdirs(data)
-    val chunks = fs.listStatus(stage).map(_.getPath)
-      .filter(_.getName.startsWith("chunk="))
-      .sortBy(p => p.getName.stripPrefix("chunk=").toLong) // bounded by #days
-    chunks.zipWithIndex.foreach { case (cdir, i) =>
-      fs.listStatus(cdir).map(_.getPath).filter(_.getName.startsWith("part-"))
-        .zipWithIndex.foreach { case (part, j) =>
-          val dest = new Path(data, f"chunk-$i%05d-$j.txt")
-          fs.rename(part, dest)
-          // explicit ascending mtimes: the file source replays oldest-first,
-          // keeping arrival order aligned with event time (watermark safety)
-          fs.setTimes(dest, 1600000000000L + i * 60000L, -1)
-        }
-    }
-    fs.delete(stage, true)
-    chunks.length
+    Replay.writeChunks(envelopes, dir, "text")
   }
 
   /** Replay the fixtures through the resident pipeline (multi-batch
@@ -174,28 +150,24 @@ object EndToEnd {
           maxFilesPerTrigger: Int = 4,
           envelopesPerFile: Long = EnvelopesPerFile,
           lateDelayFiles: Int = 0,
-          withAuxSinks: Boolean = false): DataFrame =
-    ReplayPerf.withFastCheckpoints(spark) {
+          withAuxSinks: Boolean = false): DataFrame = Replay.scoped(spark) {
     require(lateDelayFiles == 0 || lateDelayFiles >= 2 * maxFilesPerTrigger + 2,
       "the late-events filter lags one batch behind the arrival batch's " +
         "watermark (class doc): lateDelayFiles >= 2*maxFilesPerTrigger + 2")
-    writeFixtures(spark, events, workDir, envelopesPerFile, lateDelayFiles)
+    writeFixtures(events, workDir, envelopesPerFile, lateDelayFiles)
     val listener =
       if (withAuxSinks) Some(new Sinks.MetricsListener(spark, s"$workDir/metrics"))
       else None
     listener.foreach(spark.streams.addListener)
     try {
-      val raw = spark.readStream
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
-        .text(s"$workDir/data")
+      val raw = SourceAdapters.fixtureDirectory(spark, s"$workDir/data", maxFilesPerTrigger)
       val table = new KeyedParquetTable(s"$workDir/table", "tx_minute")
       val query = Pipeline.writer(
         Pipeline.aggregates(raw), table, s"$workDir/ckpt", Trigger.AvailableNow)
         .start()
       val archive = if (withAuxSinks) {
-        val rawForArchive = spark.readStream
-          .option("maxFilesPerTrigger", maxFilesPerTrigger)
-          .text(s"$workDir/data")
+        val rawForArchive =
+          SourceAdapters.fixtureDirectory(spark, s"$workDir/data", maxFilesPerTrigger)
         Some(Sinks.rawArchive(rawForArchive, s"$workDir/archive", s"$workDir/ckpt_archive")
           .trigger(Trigger.AvailableNow).start())
       } else None

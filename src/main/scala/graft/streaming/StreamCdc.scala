@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Streaming change-data capture, replayed end to end — the streaming form
   * of o18's SCD2 change detection and the fourth §2.8 replay beside the
@@ -16,7 +16,7 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
   * applies to turn a firehose into a dimension-table update feed.
   *
   * Correctness contract: with day-chunked fixtures replayed oldest-first
-  * (StreamJoin.writeDayChunkedParquet — one file per day, whole files per
+  * (Replay.writeDayChunked — one file per day, whole files per
   * trigger), cross-batch per-key order is ascending, so the union of
   * per-batch emissions must equal EXACTLY the batch change-row relation
   * (o18's lag-based `ch` subquery) the DuckDB oracle recomputes. No
@@ -39,16 +39,13 @@ object StreamCdc {
                     valid_from_us: Long)
 
   def run(spark: SparkSession, events: DataFrame, workDir: String,
-          maxFilesPerTrigger: Int = 4): DataFrame =
-    ReplayPerf.withFastCheckpoints(spark) {
+          maxFilesPerTrigger: Int = 4): DataFrame = Replay.scoped(spark) {
     import spark.implicits._
     val evs = events.select(col("user_id"), col("event_type"), col("value"),
       col("ts"), col("event_id"))
-    StreamJoin.writeDayChunkedParquet(spark, evs, workDir, "ts")
+    Replay.writeDayChunked(evs, workDir, "ts")
 
-    val src = spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(evs.schema).parquet(s"$workDir/data")
+    val src = Replay.parquetSource(spark, evs.schema, workDir, maxFilesPerTrigger)
       .select(col("user_id"), col("event_type"), col("value"),
         unix_micros(col("ts")).as("t"), col("event_id"))
       .as[Ev]
@@ -70,13 +67,6 @@ object StreamCdc {
           out.result().iterator
       }
 
-    val q = changes.toDF().writeStream.format("parquet")
-      .option("path", s"$workDir/sink")
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow)
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(s"$workDir/sink")
+    Replay.appendParquet(changes.toDF(), workDir)
   }
 }

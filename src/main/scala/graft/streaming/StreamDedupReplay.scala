@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** End-to-end replay for the S10/P2/O2 dedup seen-set
   * (ref: resources/lambdas/stream_processing/main.py:31-69 — conditional
@@ -28,10 +27,9 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamDedupReplay {
 
   def run(spark: SparkSession, events: DataFrame, workDir: String,
-          maxFilesPerTrigger: Int = 4): DataFrame =
-    ReplayPerf.withFastCheckpoints(spark) {
+          maxFilesPerTrigger: Int = 4): DataFrame = Replay.scoped(spark) {
     val dup = events.filter(col("event_id") % 3 === 0)
-    StreamJoin.writeDayChunkedParquet(spark, events.unionAll(dup), workDir, "ts")
+    Replay.writeDayChunked(events.unionAll(dup), workDir, "ts")
     dedupAndSink(spark, events.schema, workDir, maxFilesPerTrigger)
   }
 
@@ -50,13 +48,12 @@ object StreamDedupReplay {
     * last original day and seal normally under AvailableNow. Sink must
     * equal the original row set exactly, same oracle as the in-order form. */
   def runOutOfOrder(spark: SparkSession, events: DataFrame, workDir: String,
-                    maxFilesPerTrigger: Int = 4): DataFrame =
-    ReplayPerf.withFastCheckpoints(spark) {
+                    maxFilesPerTrigger: Int = 4): DataFrame = Replay.scoped(spark) {
     val orig = events.withColumn("__arrival", col("ts"))
     val dup = events.filter(col("event_id") % 3 === 0)
       .withColumn("__arrival", col("ts") + expr("INTERVAL 30 HOURS"))
-    StreamJoin.writeDayChunkedParquet(spark, orig.unionAll(dup), workDir,
-      "ts", daysPerChunk = 1, arrivalCol = Some("__arrival"))
+    Replay.writeDayChunked(orig.unionAll(dup), workDir, "ts",
+      daysPerChunk = 1, arrivalCol = Some("__arrival"))
     dedupAndSink(spark, events.schema, workDir, maxFilesPerTrigger)
   }
 
@@ -64,20 +61,11 @@ object StreamDedupReplay {
                            schema: org.apache.spark.sql.types.StructType,
                            workDir: String,
                            maxFilesPerTrigger: Int): DataFrame = {
-    val src = spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema).parquet(s"$workDir/data")
+    val src = Replay.parquetSource(spark, schema, workDir, maxFilesPerTrigger)
     val deduped = StreamDedup
       .withinWatermark(src, Seq("event_id"), "ts", delay = "48 hours")
       .select(col("user_id"), col("event_id"),
         expr("unix_micros(ts)").as("t_us"), col("value"))
-    val q = deduped.writeStream.format("parquet")
-      .option("path", s"$workDir/sink")
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow)
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(s"$workDir/sink")
+    Replay.appendParquet(deduped, workDir)
   }
 }

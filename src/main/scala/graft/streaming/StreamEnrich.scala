@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Stream-static broadcast enrichment, replayed end to end — the third
   * streaming-join topology after stream-stream inner/outer (StreamJoin):
@@ -45,28 +44,17 @@ object StreamEnrich {
     * ('unknown' for users absent from the dimension — exercised by
     * withholding users ≡ 0 (mod 17) from the written dim). */
   def run(spark: SparkSession, events: DataFrame, workDir: String,
-          maxFilesPerTrigger: Int = 4): DataFrame =
-    ReplayPerf.withFastCheckpoints(spark) {
-    StreamJoin.writeDayChunkedParquet(spark, events, workDir, "ts")
+          maxFilesPerTrigger: Int = 4): DataFrame = Replay.scoped(spark) {
+    Replay.writeDayChunked(events, workDir, "ts")
     // the dimension is WRITTEN and re-read: the join's static side is a
     // storage relation (as in production), not an in-memory frame
     userTiers(events).filter(col("user_id") % 17 =!= 0)
       .write.parquet(s"$workDir/dim")
     val dim = spark.read.parquet(s"$workDir/dim")
-    val src = spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(events.schema).parquet(s"$workDir/data")
-    val enriched = src
+    val enriched = Replay.parquetSource(spark, events.schema, workDir, maxFilesPerTrigger)
       .join(broadcast(dim), Seq("user_id"), "left_outer")
       .select(col("user_id"), col("event_id"),
         coalesce(col("tier"), lit("unknown")).as("tier"), col("value"))
-    val q = enriched.writeStream.format("parquet")
-      .option("path", s"$workDir/sink")
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow)
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(s"$workDir/sink")
+    Replay.appendParquet(enriched, workDir)
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Input row for the streaming hysteresis alarm. */
 case class HystIn(user_id: Long, ts_us: Long, event_id: Long, value: Double)
@@ -25,7 +25,7 @@ case class HystSnap(user_id: Long, n_enter: Long, n_alarm_rows: Long, n_rows: Lo
   * state is a pure function of the row SET). Determinism therefore comes
   * from two explicit mechanisms, not commutativity:
   *   - ACROSS batches: the fixture replay feeds day-chunked files in
-  *     event-time order ([[StreamJoin.writeDayChunkedParquet]] +
+  *     event-time order ([[Replay.writeDayChunked]] +
   *     maxFilesPerTrigger), so later batches carry strictly later days;
   *   - WITHIN a batch: the processor sorts each key's rows by
   *     (ts_us, event_id) — the same total order every batch gate uses —
@@ -58,29 +58,19 @@ object StreamHysteresis {
   /** Replay `events` day-chunked through the stateful alarm; return the
     * final per-user (n_enter, n_alarm_rows, n_rows) — mon12's schema. */
   def run(spark: SparkSession, events: DataFrame, workDir: String,
-          maxFilesPerTrigger: Int = 4): DataFrame =
-    ReplayPerf.withFastCheckpoints(spark) {
+          maxFilesPerTrigger: Int = 4): DataFrame = Replay.scoped(spark) {
     import spark.implicits._
     val evs = events.select(col("user_id"), col("ts"), col("event_id"), col("value"))
-    StreamJoin.writeDayChunkedParquet(spark, evs, workDir, "ts")
-    val in: Dataset[HystIn] = spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(evs.schema).parquet(s"$workDir/data")
+    Replay.writeDayChunked(evs, workDir, "ts")
+    val in: Dataset[HystIn] = Replay.parquetSource(spark, evs.schema, workDir, maxFilesPerTrigger)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("value"))
       .as[HystIn]
     val snaps = in.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fold)
-    val q = snaps.writeStream.format("parquet")
-      .option("path", s"$workDir/sink")
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow)
-      .start()
-    q.awaitTermination()
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id")).orderBy(col("n_rows").desc)
-    spark.read.parquet(s"$workDir/sink")
+    Replay.appendParquet(snaps.toDF(), workDir)
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("user_id"), col("n_enter"), col("n_alarm_rows"), col("n_rows"))
   }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 /** Stream-stream interval join, replayed end to end (the §2.8 companion of
   * EndToEnd's windowed-aggregation replay): clicks and errors are two
@@ -30,47 +29,6 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamJoin {
 
-  /** Render `df` into day-chunked parquet fixture files under `dir/data`
-    * with ascending modification times (file source replays oldest-first —
-    * arrival order tracks event time, the watermark-safety precondition).
-    * `daysPerChunk > 1` coarsens the chunking (r10 verdict task 3: replay
-    * wall time is trigger-count-bound, not row-bound) — every ordering and
-    * eviction-safety argument that holds for day chunks holds a fortiori
-    * for larger ones (fewer, strictly later batch boundaries); only ops
-    * whose correctness bounds the original→copy ARRIVAL gap from above
-    * (StreamDedupReplay's 48 h vs ≤1 day) must keep daysPerChunk = 1.
-    * `arrivalCol` (round 13): chunk on a SEPARATE arrival-time column
-    * instead of the event-time column — the out-of-order fixture shape
-    * (rows whose replay position trails their event time); the column is
-    * consumed by the chunking and never reaches the data files.
-    * Returns the chunk count. */
-  def writeDayChunkedParquet(spark: SparkSession, df: DataFrame, dir: String,
-                             tsCol: String, daysPerChunk: Int = 1,
-                             arrivalCol: Option[String] = None): Int = {
-    val stage = new Path(dir, "_stage")
-    val chunkSrc = arrivalCol.getOrElse(tsCol)
-    df.withColumn("chunk", expr(s"unix_timestamp($chunkSrc) div ${86400L * daysPerChunk}"))
-      .drop(arrivalCol.toSeq: _*)
-      .repartition(col("chunk"))
-      .write.partitionBy("chunk").parquet(stage.toString)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val data = new Path(dir, "data")
-    fs.mkdirs(data)
-    val chunks = fs.listStatus(stage).map(_.getPath)
-      .filter(_.getName.startsWith("chunk="))
-      .sortBy(p => p.getName.stripPrefix("chunk=").toLong)
-    chunks.zipWithIndex.foreach { case (cdir, i) =>
-      fs.listStatus(cdir).map(_.getPath).filter(_.getName.startsWith("part-"))
-        .zipWithIndex.foreach { case (part, j) =>
-          val dest = new Path(data, f"chunk-$i%05d-$j.parquet")
-          fs.rename(part, dest)
-          fs.setTimes(dest, 1600000000000L + i * 60000L, -1)
-        }
-    }
-    fs.delete(stage, true)
-    chunks.length
-  }
-
   /** Replay `events` through the two-subscription interval join and return
     * the sink's final row set: for each click, every error of the same
     * user in the `windowSeconds` before it (inclusive).
@@ -82,37 +40,15 @@ object StreamJoin {
   def run(spark: SparkSession, events: DataFrame, workDir: String,
           windowSeconds: Long = 21600L,
           maxFilesPerTrigger: Int = 4,
-          daysPerChunk: Int = 1): DataFrame =
-    ReplayPerf.withFastCheckpoints(spark) {
-    writeDayChunkedParquet(spark, events, workDir, "ts", daysPerChunk)
-    val schema = events.schema
-    def source() = spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema).parquet(s"$workDir/data")
-    val clicks = source().filter(col("event_type") === "click")
-      .select(col("user_id"), col("event_id").as("click_id"),
-        col("ts").as("click_ts"), col("value").as("click_value"))
-      .withWatermark("click_ts", "60 seconds")
-    val errors = source().filter(col("event_type") === "error")
-      .select(col("user_id").as("err_user_id"), col("event_id").as("err_id"),
-        col("ts").as("err_ts"))
-      .withWatermark("err_ts", "60 seconds")
-    val joined = clicks.join(errors,
-      col("user_id") === col("err_user_id") &&
-        col("err_ts") >= col("click_ts") - expr(s"INTERVAL $windowSeconds SECONDS") &&
-        col("err_ts") <= col("click_ts"))
-    val q = joined
-      .select(col("user_id"), col("click_id"), col("err_id"),
+          daysPerChunk: Int = 1): DataFrame = Replay.scoped(spark) {
+    Replay.writeDayChunked(events, workDir, "ts", daysPerChunk)
+    val joined = intervalJoin(spark, events.schema, workDir, maxFilesPerTrigger,
+      windowSeconds, Seq(col("value").as("click_value")), "inner")
+    Replay.appendParquet(
+      joined.select(col("user_id"), col("click_id"), col("err_id"),
         unix_micros(col("click_ts")).as("click_t_us"),
-        unix_micros(col("err_ts")).as("err_t_us"), col("click_value"))
-      .writeStream.format("parquet")
-      .option("path", s"$workDir/sink")
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow)
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(s"$workDir/sink")
+        unix_micros(col("err_ts")).as("err_t_us"), col("click_value")),
+      workDir)
   }
 
   /** LEFT OUTER variant of [[run]] — the semantics twin whose hard part is
@@ -135,8 +71,7 @@ object StreamJoin {
   def runLeftOuter(spark: SparkSession, events: DataFrame, workDir: String,
                    windowSeconds: Long = 21600L,
                    maxFilesPerTrigger: Int = 4,
-                   daysPerChunk: Int = 1): DataFrame =
-    ReplayPerf.withFastCheckpoints(spark) {
+                   daysPerChunk: Int = 1): DataFrame = Replay.scoped(spark) {
     import spark.implicits._
     val maxTs = events.agg(max(col("ts"))).head().getTimestamp(0)
     val far = new java.sql.Timestamp(maxTs.getTime + 2L * 86400L * 1000L)
@@ -145,35 +80,35 @@ object StreamJoin {
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val evs = events.select(col("event_id"), col("ts"), col("user_id"),
       col("event_type"), col("value"), col("props"))
-    writeDayChunkedParquet(spark, evs.unionByName(sentinels), workDir, "ts",
-      daysPerChunk)
-    val schema = evs.schema
-    def source() = spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema).parquet(s"$workDir/data")
+    Replay.writeDayChunked(evs.unionByName(sentinels), workDir, "ts", daysPerChunk)
+    val joined = intervalJoin(spark, evs.schema, workDir, maxFilesPerTrigger,
+      windowSeconds, Seq.empty, "left_outer")
+    Replay.appendParquet(
+      joined.select(col("user_id"), col("click_id"), col("err_id"),
+        unix_micros(col("click_ts")).as("click_t_us")),
+      workDir).filter(col("user_id") >= 0)
+  }
+
+  /** Clicks joined per user to the errors in the `windowSeconds` before
+    * them, each side its own readStream over the fixtures with a 60 s
+    * watermark; `clickExtra` rides along on the click side. */
+  private def intervalJoin(spark: SparkSession, schema: StructType,
+                           workDir: String, maxFilesPerTrigger: Int,
+                           windowSeconds: Long, clickExtra: Seq[Column],
+                           joinType: String): DataFrame = {
+    def source() = Replay.parquetSource(spark, schema, workDir, maxFilesPerTrigger)
     val clicks = source().filter(col("event_type") === "click")
-      .select(col("user_id"), col("event_id").as("click_id"),
-        col("ts").as("click_ts"))
+      .select(Seq(col("user_id"), col("event_id").as("click_id"),
+        col("ts").as("click_ts")) ++ clickExtra: _*)
       .withWatermark("click_ts", "60 seconds")
     val errors = source().filter(col("event_type") === "error")
       .select(col("user_id").as("err_user_id"), col("event_id").as("err_id"),
         col("ts").as("err_ts"))
       .withWatermark("err_ts", "60 seconds")
-    val joined = clicks.join(errors,
+    clicks.join(errors,
       col("user_id") === col("err_user_id") &&
         col("err_ts") >= col("click_ts") - expr(s"INTERVAL $windowSeconds SECONDS") &&
         col("err_ts") <= col("click_ts"),
-      "left_outer")
-    val q = joined
-      .select(col("user_id"), col("click_id"), col("err_id"),
-        unix_micros(col("click_ts")).as("click_t_us"))
-      .writeStream.format("parquet")
-      .option("path", s"$workDir/sink")
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow)
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(s"$workDir/sink").filter(col("user_id") >= 0)
+      joinType)
   }
 }

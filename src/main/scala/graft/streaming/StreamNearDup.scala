@@ -1,9 +1,8 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.ops.DedupOps
 
@@ -42,38 +41,11 @@ object StreamNearDup {
     * modification times (replayed oldest-first). Documents are assigned
     * round-robin by doc_id, so near-dup pairs overwhelmingly SPAN files —
     * the cross-micro-batch case is the one under test. */
-  def writeFixtures(spark: SparkSession, docs: DataFrame, dir: String,
-                    numFiles: Int): Unit = {
-    val stage = new Path(dir, "_stage")
-    docs.select(pmod(col("doc_id"), lit(numFiles)).as("chunk"),
-        to_json(struct(col("doc_id"), col("text"))).as("value"))
-      .repartition(col("chunk"))
-      .write.partitionBy("chunk").text(stage.toString)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val data = new Path(dir, "data")
-    fs.mkdirs(data)
-    val chunks = fs.listStatus(stage).map(_.getPath)
-      .filter(_.getName.startsWith("chunk="))
-      .sortBy(p => p.getName.stripPrefix("chunk=").toLong)
-    chunks.zipWithIndex.foreach { case (cdir, i) =>
-      fs.listStatus(cdir).map(_.getPath).filter(_.getName.startsWith("part-"))
-        .zipWithIndex.foreach { case (part, j) =>
-          val dest = new Path(data, f"chunk-$i%05d-$j.txt")
-          fs.rename(part, dest)
-          fs.setTimes(dest, 1600000000000L + i * 60000L, -1)
-        }
-    }
-    fs.delete(stage, true)
-  }
-
-  /** Epoch-idempotent append (delete `__b=epoch`, then write). */
-  private def writeEpoch(df: DataFrame, path: String, epoch: Long): Unit = {
-    val dir = new Path(path, s"__b=$epoch")
-    val fs = dir.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir)) fs.delete(dir, true)
-    df.withColumn("__b", lit(epoch))
-      .write.mode(SaveMode.Append).partitionBy("__b").parquet(path)
-  }
+  private def writeFixtures(docs: DataFrame, dir: String, numFiles: Int): Unit =
+    Replay.writeChunks(
+      docs.select(pmod(col("doc_id"), lit(numFiles)).as("chunk"),
+        to_json(struct(col("doc_id"), col("text"))).as("value")),
+      dir, "text")
 
   /** Compact an epoch-keyed accumulated table (the signature table grows one
     * epoch dir + >=1 file per micro-batch — unbounded over a long replay)
@@ -116,14 +88,12 @@ object StreamNearDup {
           numFiles: Int = 8, maxFilesPerTrigger: Int = 2,
           numHashes: Int = 16, rowsPerBand: Int = 4,
           compactEvery: Int = 0): DataFrame =
-    ReplayPerf.withFastCheckpoints(spark) {
-    writeFixtures(spark, docs, workDir, numFiles)
+    Replay.scoped(spark) {
+    writeFixtures(docs, workDir, numFiles)
     val sigPath = s"$workDir/sigs"
     val pairPath = s"$workDir/pairs"
 
-    val stream = spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(s"$workDir/data")
+    val stream = SourceAdapters.fixtureDirectory(spark, s"$workDir/data", maxFilesPerTrigger)
       .select(from_json(col("value"), docSchema).as("d"))
       .select(col("d.doc_id").as("doc_id"), col("d.text").as("text"))
 
@@ -133,14 +103,12 @@ object StreamNearDup {
     // in the current batch)
     val crossAcc = spark.sparkContext.longAccumulator("crossBatchPairs")
 
-    val query = stream.writeStream
+    Replay.drain(stream.writeStream
       .outputMode("append")
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
         // 1. signatures for the new docs, appended under this batch's epoch
-        writeEpoch(DedupOps.signatures(batch, "doc_id", "text", numHashes),
+        StreamView.writeEpoch(DedupOps.signatures(batch, "doc_id", "text", numHashes),
           sigPath, batchId)
         // 2. incremental band join: new batch (re-read from its own epoch —
         //    one signature computation per doc, ever) vs the accumulated
@@ -167,7 +135,7 @@ object StreamNearDup {
             greatest(col("nid"), col("aid")).as("id_b"),
             DedupOps.estJaccard(col("nsig"), col("asig"), numHashes).as("est_jaccard"))
           .distinct()
-        writeEpoch(pairs, pairPath, batchId)
+        StreamView.writeEpoch(pairs, pairPath, batchId)
         if (compactEvery > 0) {
           // re-read this batch's written pairs (no recompute of the band
           // join); an all-duplicate-free batch writes no partition dir
@@ -197,9 +165,7 @@ object StreamNearDup {
           if (batchId % compactEvery == compactEvery - 1)
             compactEpochs(s, sigPath)
         }
-      }
-      .start()
-    query.awaitTermination()
+      }, workDir)
 
     val out = spark.read.parquet(pairPath)
     // the contract under test is CROSS-batch incremental detection

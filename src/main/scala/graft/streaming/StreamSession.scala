@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming session-window aggregation, replayed end to end — the third
   * §2.8 replay next to EndToEnd's tumbling-window agg and StreamJoin's
@@ -12,7 +11,7 @@ import org.apache.spark.sql.streaming.Trigger
   * riding the batch form (`a11_session_window`) alone.
   *
   * Correctness contract: with day-chunked fixtures replayed oldest-first
-  * (StreamJoin.writeDayChunkedParquet's ascending-mtime discipline), the
+  * (Replay.writeDayChunked's ascending-mtime discipline), the
   * append-mode sink must hold EXACTLY the batch sessionization the DuckDB
   * oracle recomputes (gap-split per user, per-session count + decimal-exact
   * value sum). Why eviction cannot race a merge: a session is evicted only
@@ -42,17 +41,15 @@ object StreamSession {
 
   def run(spark: SparkSession, events: DataFrame, workDir: String,
           gap: String = "30 minutes", maxFilesPerTrigger: Int = 4): DataFrame =
-    ReplayPerf.withFastCheckpoints(spark) {
+    Replay.scoped(spark) {
     import spark.implicits._
     val evs = events.select(col("user_id"), col("ts"), col("value"))
     val maxTs = evs.agg(max(col("ts"))).head().getTimestamp(0)
     val sentinel = Seq((-1L, new java.sql.Timestamp(maxTs.getTime + 2L * 86400L * 1000L), 0.0))
       .toDF("user_id", "ts", "value")
-    StreamJoin.writeDayChunkedParquet(spark, evs.unionByName(sentinel), workDir, "ts")
+    Replay.writeDayChunked(evs.unionByName(sentinel), workDir, "ts")
 
-    val sessions = spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(evs.schema).parquet(s"$workDir/data")
+    val sessions = Replay.parquetSource(spark, evs.schema, workDir, maxFilesPerTrigger)
       .withWatermark("ts", "60 seconds")
       .groupBy(col("user_id"), session_window(col("ts"), gap).as("w"))
       .agg(count(lit(1)).as("n_events"),
@@ -60,13 +57,6 @@ object StreamSession {
       .select(col("user_id"), unix_micros(col("w.start")).as("session_start_us"),
         col("n_events"), col("dsum").cast("double").as("sum_value"))
 
-    val q = sessions.writeStream.format("parquet")
-      .option("path", s"$workDir/sink")
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow)
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(s"$workDir/sink").filter(col("user_id") >= 0)
+    Replay.appendParquet(sessions, workDir).filter(col("user_id") >= 0)
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.Sketches
 
@@ -41,27 +40,21 @@ object StreamSketch {
     * the point. */
   def run(spark: SparkSession, events: DataFrame, workDir: String,
           k: Int = 256, maxFilesPerTrigger: Int = 4): DataFrame =
-    ReplayPerf.withFastCheckpoints(spark) {
+    Replay.scoped(spark) {
     val evs = events.select(col("event_id"), col("ts"))
-    StreamJoin.writeDayChunkedParquet(spark, evs, workDir, "ts")
+    Replay.writeDayChunked(evs, workDir, "ts")
     val viewPath = s"$workDir/sketch"
 
-    val src = spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(evs.schema).parquet(s"$workDir/data")
-
     val nBatches = spark.sparkContext.longAccumulator("sketch_batches")
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        nBatches.add(1)
-        val partial = Sketches.kmvSketchBy(batch,
-          date_format(col("ts"), "yyyy-MM-dd"), col("event_id"), k)
-        StreamView.writeEpoch(partial, viewPath, id)
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow)
-      .start()
-    q.awaitTermination()
+    Replay.drain(
+      Replay.parquetSource(spark, evs.schema, workDir, maxFilesPerTrigger).writeStream
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          nBatches.add(1)
+          val partial = Sketches.kmvSketchBy(batch,
+            date_format(col("ts"), "yyyy-MM-dd"), col("event_id"), k)
+          StreamView.writeEpoch(partial, viewPath, id)
+        },
+      workDir)
     require(nBatches.value > 1,
       s"replay collapsed into ${nBatches.value} micro-batch(es); the " +
         "cross-batch partial merge is the point of the streaming form")

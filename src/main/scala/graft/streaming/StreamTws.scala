@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, Trigger, TTLConfig, ValueState, MapState}
+  TimerValues, TTLConfig, ValueState, MapState}
 
 /** Per-event row consumed by the stateful processor. `v100` carries the
   * value pre-quantized to DECIMAL(30,2)·100 as an exact Long — the
@@ -51,6 +51,11 @@ case class TwsAgg(n: Long, sum: Long, first: Long, last: Long)
   */
 object StreamTws {
 
+  /** transformWithState is served by the RocksDB state store. */
+  private val RocksDbStateStore =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   private class ProfileProcessor
       extends StatefulProcessor[Long, TwsIn, TwsSnap] {
     @transient private var agg: ValueState[TwsAgg] = _
@@ -81,47 +86,23 @@ object StreamTws {
     * (latest-wins) per-user profile with the suite's column conventions. */
   def run(spark: SparkSession, events: DataFrame, workDir: String,
           maxFilesPerTrigger: Int = 4): DataFrame =
-    ReplayPerf.withFastCheckpoints(spark) {
+    Replay.scoped(spark, RocksDbStateStore) {
     import spark.implicits._
     val evs = events.select(col("user_id"), col("ts"), col("event_id"),
       col("event_type"),
       (col("value").cast("decimal(30,2)") * 100).cast("long").as("v100"))
-    StreamJoin.writeDayChunkedParquet(spark, evs, workDir, "ts")
-
-    // transformWithState is served by the RocksDB state store; scope the
-    // provider override to this query and restore the session default.
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in: Dataset[TwsIn] = spark.readStream
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
-        .schema(evs.schema).parquet(s"$workDir/data")
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("event_id"), col("event_type"), col("v100"))
-        .as[TwsIn]
-      val snaps = in.groupByKey(_.user_id)
-        .transformWithState(new ProfileProcessor,
-          TimeMode.None(), OutputMode.Append(), Encoders.product[TwsSnap])
-
-      val q = snaps.writeStream.format("parquet")
-        .option("path", s"$workDir/sink")
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow)
-        .start()
-      q.awaitTermination()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
-    }
+    Replay.writeDayChunked(evs, workDir, "ts")
+    val in: Dataset[TwsIn] = Replay.parquetSource(spark, evs.schema, workDir, maxFilesPerTrigger)
+      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+        col("event_id"), col("event_type"), col("v100"))
+      .as[TwsIn]
+    val snaps = in.groupByKey(_.user_id)
+      .transformWithState(new ProfileProcessor,
+        TimeMode.None(), OutputMode.Append(), Encoders.product[TwsSnap])
 
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id")).orderBy(col("n_events").desc)
-    spark.read.parquet(s"$workDir/sink")
+    Replay.appendParquet(snaps.toDF(), workDir)
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("user_id"), col("n_events"), col("n_types"),
         (col("sum_v100").cast("decimal(30,2)") / 100).cast("double").as("sum_value"),

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.Incremental
 
@@ -223,28 +222,22 @@ object StreamView {
     * multiple micro-batches — a single-batch run would pass vacuously. */
   def run(spark: SparkSession, events: DataFrame, workDir: String,
           maxFilesPerTrigger: Int = 4, compactEvery: Int = 3): DataFrame =
-    ReplayPerf.withFastCheckpoints(spark) {
+    Replay.scoped(spark) {
     val evs = events.select(col("user_id"), col("value"), col("ts"))
-    StreamJoin.writeDayChunkedParquet(spark, evs, workDir, "ts")
+    Replay.writeDayChunked(evs, workDir, "ts")
     val viewPath = s"$workDir/view"
 
-    val src = spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(evs.schema).parquet(s"$workDir/data")
-
     val nBatches = spark.sparkContext.longAccumulator("view_batches")
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        nBatches.add(1)
-        val partial = Incremental.partial(batch, Seq(col("user_id")), col("value"))
-        writeEpoch(partial, viewPath, id)
-        if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
-          compactMerge(batch.sparkSession, viewPath, Seq("user_id"), id - 1)
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow)
-      .start()
-    q.awaitTermination()
+    Replay.drain(
+      Replay.parquetSource(spark, evs.schema, workDir, maxFilesPerTrigger).writeStream
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          nBatches.add(1)
+          val partial = Incremental.partial(batch, Seq(col("user_id")), col("value"))
+          writeEpoch(partial, viewPath, id)
+          if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
+            compactMerge(batch.sparkSession, viewPath, Seq("user_id"), id - 1)
+        },
+      workDir)
     require(nBatches.value > 1,
       s"replay collapsed into ${nBatches.value} micro-batch(es); the " +
         "cross-batch merge is the point of the streaming form")

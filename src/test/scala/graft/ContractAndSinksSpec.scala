@@ -16,6 +16,16 @@ class ContractAndSinksSpec extends SparkSpec {
     assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
   }
 
+  test("maintenance set: registered queries, 28 of them, every e2e replay in it") {
+    val keys = SparkEntry.queries.keySet
+    assert(SparkEntry.maintenance.subsetOf(keys),
+      s"unregistered: ${SparkEntry.maintenance -- keys}")
+    assert(SparkEntry.maintenance.size === 28)
+    val replays = keys.filter(_.startsWith("e2e_"))
+    assert(replays.subsetOf(SparkEntry.maintenance),
+      s"replays outside the maintenance set: ${replays -- SparkEntry.maintenance}")
+  }
+
   test("raw archive sink persists the unparsed stream verbatim") {
     val input = MemoryStream[String](spark)
     val dir = tmpDir("archive")

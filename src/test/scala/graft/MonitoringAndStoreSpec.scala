@@ -57,6 +57,26 @@ class MonitoringAndStoreSpec extends SparkSpec {
     assert(afterCompact === latest)
   }
 
+  test("keyed table: file counts and compaction skip a running write's _temporary tree") {
+    val dir = tmpDir("kt_tmp")
+    val table = new KeyedParquetTable(dir, "tx_minute")
+    def row(minute: String, n: Long, et: Double) =
+      Seq((minute, n, et)).toDF("tx_minute", "total_nb_trx_1min", "event_time")
+    table.upsert(row("2024-01-01 00:01:00", 5L, 100.0), version = 0)
+    table.upsert(row("2024-01-01 00:01:00", 7L, 200.0), version = 1)
+    // what an in-flight upsert leaves under the table root before its commit
+    val inFlight = java.nio.file.Paths.get(dir, "_temporary", "0", "_temporary",
+      "attempt_202401010000_0000_m_000000_0", "year=2024", "month=01", "day=01",
+      "hour=00")
+    java.nio.file.Files.createDirectories(inFlight)
+    java.nio.file.Files.createFile(inFlight.resolve("part-00000.parquet"))
+    assert(table.hourPrefixFileCounts(spark) === Seq(("2024-01-01 00", 2)))
+    table.compact(spark)
+    assert(table.hourPrefixFileCounts(spark) === Seq(("2024-01-01 00", 1)))
+    assert(table.readLatest(spark).select("total_nb_trx_1min").as[Long]
+      .collect().toSeq === Seq(7L))
+  }
+
   test("keyed table: tombstone delete lifecycle across every read path") {
     val table = new KeyedParquetTable(tmpDir("ktdel"), "tx_minute")
     def row(minute: String, n: Long) =

@@ -524,6 +524,22 @@ class OpsSpec extends SparkSpec {
     }
   }
 
+  test("kmeans: fixed-width path fails loudly when dims is not the vector width") {
+    val vecs = (0L until 6L).map(i => (i, Array.tabulate(4)(d => (i * 4 + d).toFloat)))
+      .toDF("vec_id", "embedding")
+    val init = vecs.filter($"vec_id" % 3 === 0)
+      .select($"vec_id".as("centroid_id"), $"embedding".as("centroid_vec"))
+    for (dims <- Seq(3, 5)) {
+      val e = intercept[Exception] {
+        SimilarityOps.kmeansRefine(vecs, init, "vec_id", "embedding", iters = 1,
+          dims = dims).collect()
+      }
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString("\n")
+      assert(msgs.contains(s"width differs from dims = $dims"), msgs)
+    }
+  }
+
   test("vocabulary: deterministic count-desc/term-asc ids, layout-independent") {
     val docs = Seq((1L, "b a a"), (2L, "c a b"), (3L, "  ")).toDF("doc_id", "text")
     // counts: a=3, b=2, c=1; blank doc contributes nothing

@@ -1,144 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Optimizer-rule tier: BoundedTopKRewrite contract. */
+/** Plan-shape contracts: Spark's own optimizer rewrites the gate queries
+  * rely on, and the plan shapes of selected gate queries. */
 class PlansSpec extends SparkSpec {
-
-  private def withExtSession[A](f: SparkSession => A): A = {
-    val prev = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s = SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      f(s)
-    } finally {
-      SparkSession.setActiveSession(prev)
-      SparkSession.setDefaultSession(prev)
-    }
-  }
-
-  test("rewrites the slice/sort/collect_list idiom to the bounded aggregate, both sort spellings") {
-    withExtSession { s =>
-      import s.implicits._
-      val df = (1 to 300).map(i => (i % 5, (i * 17 % 83).toDouble)).toDF("g", "v")
-      val viaSortArray = df.groupBy($"g")
-        .agg(collect_list($"v").as("l"))
-        .select($"g", slice(sort_array($"l", asc = false), 1, 3).as("t"))
-      val viaArraySort = df.groupBy($"g")
-        .agg(collect_list($"v").as("l"))
-        .select($"g", slice(reverse(array_sort($"l")), 1, 3).as("t"))
-      for (q <- Seq(viaSortArray, viaArraySort)) {
-        val opt = q.queryExecution.optimizedPlan.toString
-        assert(opt.contains("topk_vals"), s"rewrite fired:\n$opt")
-        assert(!opt.contains("collect_list"), s"unbounded buffer gone:\n$opt")
-      }
-      // results identical to the un-extended engine's idiom
-      val expect = df.groupBy($"g")
-        .agg(graft.expressions.TopKAggregate.topkVals($"v", 3).as("t"))
-        .select($"g", $"t").as[(Int, Seq[Double])].collect().toMap
-      val got = viaSortArray.as[(Int, Seq[Double])].collect().toMap
-      assert(got === expect)
-    }
-  }
-
-  test("declines when the raw list escapes, or the column is not double") {
-    withExtSession { s =>
-      import s.implicits._
-      val df = (1 to 50).map(i => (i % 3, i.toDouble)).toDF("g", "v")
-      val escapes = df.groupBy($"g").agg(collect_list($"v").as("l"))
-        .select($"g", slice(sort_array($"l", asc = false), 1, 3).as("t"), size($"l").as("n"))
-      assert(escapes.queryExecution.optimizedPlan.toString.contains("collect_list"))
-      // escape keeps full semantics: n is the GROUP size, not k
-      assert(escapes.collect().map(_.getInt(2)).toSet.max > 3)
-      val ints = (1 to 50).map(i => (i % 3, i)).toDF("g", "v")
-        .groupBy($"g").agg(collect_list($"v").as("l"))
-        .select(slice(sort_array($"l", asc = false), 1, 3))
-      assert(ints.queryExecution.optimizedPlan.toString.contains("collect_list"))
-    }
-  }
-
-  test("DistinctGuardRewrite: count(distinct) guards lower to min/max, declines on escape or foreign bounds") {
-    withExtSession { s =>
-      import s.implicits._
-      val df = Seq((1, Some("a")), (1, Some("b")), (1, Some("a")),
-        (2, Some("x")), (2, Some("x")),
-        (3, None: Option[String]), (3, None),
-        (4, Some("q")), (4, None)).toDF("g", "v")
-      // > 1: at least two distinct non-null values → only g=1
-      val gt = df.groupBy($"g").agg(countDistinct($"v").as("n"))
-        .filter($"n" > 1).select($"g")
-      val gtPlan = gt.queryExecution.optimizedPlan.toString
-      assert(!gtPlan.contains("count(distinct") && !gtPlan.contains("Expand"),
-        s"distinct count eliminated:\n$gtPlan")
-      assert(gtPlan.contains("min(") && gtPlan.contains("max("),
-        s"guard lowered to min/max:\n$gtPlan")
-      assert(gt.as[Int].collect().toSet === Set(1))
-      // = 1: exactly one distinct non-null — all-null group (g=3) must drop
-      val eq = df.groupBy($"g").agg(countDistinct($"v").as("n"))
-        .filter($"n" === 1).select($"g")
-      assert(!eq.queryExecution.optimizedPlan.toString.contains("count(distinct"))
-      assert(eq.as[Int].collect().toSet === Set(2, 4))
-      // > 0: any non-null value
-      val gz = df.groupBy($"g").agg(countDistinct($"v").as("n"))
-        .filter($"n" > 0).select($"g")
-      assert(!gz.queryExecution.optimizedPlan.toString.contains("count(distinct"))
-      assert(gz.as[Int].collect().toSet === Set(1, 2, 4))
-      // SQL HAVING spelling
-      df.createOrReplaceTempView("dgr_t")
-      val hv = s.sql(
-        "SELECT g FROM dgr_t GROUP BY g HAVING COUNT(DISTINCT v) > 1")
-      assert(!hv.queryExecution.optimizedPlan.toString.contains("count(distinct"),
-        s"HAVING form rewrites too:\n${hv.queryExecution.optimizedPlan}")
-      assert(hv.as[Int].collect().toSet === Set(1))
-      // escape: the count value is selected — semantics would change, decline
-      val esc = df.groupBy($"g").agg(countDistinct($"v").as("n"))
-        .filter($"n" > 1).select($"g", $"n")
-      assert(esc.queryExecution.optimizedPlan.toString.contains("count(distinct"),
-        "declines when the count escapes")
-      assert(esc.as[(Int, Long)].collect().toSet === Set((1, 2L)))
-      // foreign bound: n > 2 is a real cardinality question — decline
-      val other = df.groupBy($"g").agg(countDistinct($"v").as("n"))
-        .filter($"n" > 2).select($"g")
-      assert(other.queryExecution.optimizedPlan.toString.contains("count(distinct"),
-        "declines on bounds min/max cannot answer")
-      assert(other.collect().isEmpty)
-    }
-  }
-
-  test("DistinctGuardRewrite: negated guard keeps the all-null group (two-valued = 1 form)") {
-    withExtSession { s =>
-      import s.implicits._
-      val df = Seq((1, Some("a")), (1, Some("b")),
-        (2, Some("x")), (2, Some("x")),
-        (3, None: Option[String]), (3, None)).toDF("g", "v")
-      // n <> 1 parses to Not(EqualTo(n, 1)). Group 3 has count(distinct)=0,
-      // so NOT(0=1)=TRUE must keep it. A bare min=max rewrite would be
-      // Not(NULL)=NULL there and wrongly drop it — this pins the two-valued
-      // And(IsNotNull(min), min=max) replacement.
-      val ne = df.groupBy($"g").agg(countDistinct($"v").as("n"))
-        .filter($"n" =!= 1).select($"g")
-      val nePlan = ne.queryExecution.optimizedPlan.toString
-      assert(!nePlan.contains("count(distinct") && !nePlan.contains("Expand"),
-        s"negated guard still rewrites:\n$nePlan")
-      assert(ne.as[Int].collect().toSet === Set(1, 3),
-        "all-null group survives NOT(count=1)")
-      // SQL spelling of the same trap
-      df.createOrReplaceTempView("dgr_neg_t")
-      val hv = s.sql(
-        "SELECT g FROM dgr_neg_t GROUP BY g HAVING COUNT(DISTINCT v) <> 1")
-      assert(!hv.queryExecution.optimizedPlan.toString.contains("count(distinct"))
-      assert(hv.as[Int].collect().toSet === Set(1, 3))
-      // and the un-negated = 1 form still drops the all-null group
-      val eq = df.groupBy($"g").agg(countDistinct($"v").as("n"))
-        .filter($"n" === 1).select($"g")
-      assert(eq.as[Int].collect().toSet === Set(2))
-    }
-  }
 
   test("correlated scalar subqueries de-correlate to aggregate + join (q7 shape)") {
     import spark.implicits._

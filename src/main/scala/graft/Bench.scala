@@ -1,4 +1,8 @@
 package graft
+
+import graft.queries.Kind.{Maintenance, Throughput}
+import graft.queries.Registry
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -31,14 +35,26 @@ object Bench {
       val s = xs.sorted; val n = s.length
       if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot(q => SparkEntry.maintenance(q._1) || maintOnly)
-      .filter(q => only.forall(_.contains(q._1))).map { case (name, fn) =>
-      val times = (1 to reps).map { _ =>
+    // Maintenance round trips (streaming pipeline, on-disk IVF index, store
+    // compaction) are kept out of query THROUGHPUT but still tracked — a 5x
+    // slowdown in StreamNearDup or IvfIndex.search was once invisible to the
+    // driver (r8 verdict gap 1). They run after the throughput queries, once
+    // each (dominated by fixed trigger/checkpoint/FS overhead, so a
+    // rep-median adds minutes for little signal), and report under a separate
+    // "maintenance" key so the round-over-round query total stays comparable.
+    // Skipped during SPARK_GRAFT_ONLY local iteration.
+    val selected = Registry.all
+      .filter(q => only.forall(_.contains(q.name)) && (q.kind match {
+        case Throughput => !maintOnly
+        case Maintenance => only.isEmpty || maintOnly
+      }))
+      .sortBy(q => (q.kind == Maintenance, q.name))
+    val (results, maintenance) = selected.map { q =>
+      val times = (1 to (if (q.kind == Throughput) reps else 1)).map { _ =>
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch {
+        val ok = try { q.build(spark, sfDir).count(); true } catch {
           case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+            System.err.println(s"[bench] ${q.name} FAILED: ${e.getMessage}")
             false
         }
         // failures report a negative time so they can't masquerade as fast wins
@@ -53,34 +69,9 @@ object Bench {
       // per-query progress on stderr: a sweep run that dies (or a query
       // that wedges) must still leave every completed timing attributable
       // — the r11 100× sweep lost 27 min to an unattributable wedge
-      System.err.println(f"[bench] done $name $med%.3f")
-      (name, med, spread)
-    }
-    // SparkEntry.maintenance is excluded from query THROUGHPUT, but those
-    // replay/maintenance round trips (streaming pipeline, on-disk IVF index,
-    // store compaction) previously had NO regression tracking at all — a 5x
-    // slowdown in StreamNearDup or IvfIndex.search was invisible to the
-    // driver (r8 verdict gap 1). Time each ONCE (they are dominated by fixed
-    // trigger/checkpoint/FS overhead, so rep-median adds minutes for little
-    // signal) and report them under a separate "maintenance" key so the
-    // round-over-round query total stays comparable. Skipped during
-    // SPARK_GRAFT_ONLY local iteration.
-    val maintenance =
-      if (only.isDefined && !maintOnly) Seq.empty
-      else SparkEntry.queries.toSeq.sortBy(_._1).filter(q => SparkEntry.maintenance(q._1))
-        .filter(q => only.forall(_.contains(q._1))).map {
-        case (name, fn) =>
-          val t0 = System.nanoTime()
-          val ok = try { fn(spark, sfDir).count(); true } catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] maintenance $name FAILED: ${e.getMessage}")
-              false
-          }
-          val elapsed = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-          spark.catalog.clearCache()
-          System.err.println(f"[bench] done $name $elapsed%.3f")
-          (name, elapsed)
-      }
+      System.err.println(f"[bench] done ${q.name} $med%.3f")
+      (q, med, spread)
+    }.partition(_._1.kind == Throughput)
     // r7/r10 postmortem: the driver tail-captures the LAST ~2000 bytes of
     // stdout; a 248-query map is ~5 KB and can never fit, so any summary
     // line carrying it parses as null (r10) or loses its head (r07).
@@ -90,11 +81,11 @@ object Bench {
     // keys), the maintenance map, and the load/spread diagnostics — and is
     // guaranteed to fit whole inside the capture window.
     def r3(v: Double): String = f"$v%.3f"
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + r3(v) }
+    val qs = results.map { case (q, v, _) => s"\"" + q.name + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    val spreads = results.map { case (k, _, s) => s"\"" + k + "\":" + r3(s) }
+    val spreads = results.map { case (q, _, s) => s"\"" + q.name + "\":" + r3(s) }
       .mkString("{", ",", "}")
-    val maint = maintenance.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
+    val maint = maintenance.map { case (q, v, _) => s"\"" + q.name + "\":" + r3(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val loadAfter = osBean.getSystemLoadAverage
@@ -107,7 +98,7 @@ object Bench {
       val f = t.takeWhile(!_.isDigit)
       if (f.isEmpty) t else f
     }
-    val fams = results.groupBy(r => family(r._1)).toSeq.sortBy(_._1).map {
+    val fams = results.groupBy(r => family(r._1.name)).toSeq.sortBy(_._1).map {
       case (f, rs) =>
         val v = if (rs.exists(_._2 < 0)) -1.0 else rs.map(_._2).sum
         s"\"" + f + "\":" + r3(v)

@@ -817,9 +817,9 @@ object DedupOps {
     *
     * Algorithm: min-label propagation to fixpoint — each round every node
     * takes the min label among itself and its neighbors; one join + one
-    * groupBy per round, lineage cut by localCheckpoint. Rounds needed =
-    * component diameter: near-dup components are clique-ish (2-3 hops), so
-    * this converges in a handful of rounds. For adversarial long-chain
+    * groupBy per round, the labels' lineage cut by localCheckpoint.
+    * Rounds needed = component diameter: near-dup components are
+    * clique-ish (2-3 hops), so this converges in a handful of rounds. For adversarial long-chain
     * graphs the alternating large-star/small-star rounds (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond") drop the bound to
     * O(log²) with the same relational core.
@@ -835,6 +835,12 @@ object DedupOps {
     // driver-synchronized job instead of two (eager ckpt + sum). Plan
     // truncation is unchanged (the Dataset is LogicalRDD-backed either
     // way); only the final-stage materialization fuses with the sum.
+    // RDD lineage is cut for `labels` only: with the default
+    // spark.checkpoint.checkpointAllMarkedAncestors=false a job checkpoints
+    // the first marked RDD it reaches, which is always `labels`. The next
+    // action persists `edges` but does not checkpoint it, so `edges` stays
+    // persist-backed (MEMORY_AND_DISK) with live lineage; a lost block is
+    // recomputed from `pairs`.
     val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
       .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
       .distinct().localCheckpoint(eager = false)

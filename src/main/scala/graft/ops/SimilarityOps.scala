@@ -786,7 +786,7 @@ object SimilarityOps {
   // by its codewords, and per-corpus-row scoring is `m` table lookups
   // instead of a d-dim dot product.
   //
-  // Spark-first shape, mirrored by a stage-exact DuckDB oracle (SparkEntry
+  // Spark-first shape, mirrored by a stage-exact DuckDB oracle (query
   // `s7_pq_ann`):
   //   - the codebook is a tiny relation (m·k rows), always broadcast;
   //   - codes live LONG-FORM (id, sub, code_id) — one narrow row per

@@ -24,8 +24,9 @@ import org.apache.spark.sql.functions._
   * [[compact]] which also collapses versions per partition.
   */
 class KeyedParquetTable(val path: String, val keyCol: String,
-                        val versionCol: String = "event_time",
-                        val partitioned: Boolean = true) extends Serializable {
+                        val versionCol: String = "event_time") extends Serializable {
+
+  private val partCols = Seq("year", "month", "day", "hour")
 
   /** Partition columns derived from the key (the reference keys by a
     * "yyyy-MM-dd HH:mm:ss" minute string and lays out y/m/d/h prefixes). */
@@ -44,7 +45,7 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     * exactly one task, so the one-file-per-directory layout is unchanged. */
   private def byPartitionDirs(df: DataFrame, extra: Seq[String] = Nil): DataFrame = {
     val n = df.sparkSession.sessionState.conf.numShufflePartitions
-    df.repartition(n, (Seq("year", "month", "day", "hour") ++ extra).map(col): _*)
+    df.repartition(n, (partCols ++ extra).map(col): _*)
   }
 
   /** S6 — upsert a batch: append new versions; readers resolve latest-wins.
@@ -53,17 +54,13 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     *   ties when two upserts of the same key share an `event_time` second —
     *   the reference's "last put_record wins" needs a total order. */
   def upsert(batch: DataFrame, version: Long = 0L, bulk: Boolean = false): Unit = {
-    val stamped = batch.withColumn("__v", lit(version))
-    val w = if (partitioned) {
-      val p = withPartitionCols(stamped)
-      // bulk (backfill) loads: co-locate each hour partition into one task so
-      // the append writes one file per directory instead of one per task —
-      // streaming micro-batches skip this (few open windows, extra shuffle
-      // not worth it; compact() collapses their small files on cadence)
-      val arranged = if (bulk) byPartitionDirs(p) else p
-      arranged.write.partitionBy("year", "month", "day", "hour")
-    } else stamped.write
-    w.mode(SaveMode.Append).parquet(path)
+    val p = withPartitionCols(batch.withColumn("__v", lit(version)))
+    // bulk (backfill) loads: co-locate each hour partition into one task so
+    // the append writes one file per directory instead of one per task —
+    // streaming micro-batches skip this (few open windows, extra shuffle
+    // not worth it; compact() collapses their small files on cadence)
+    val arranged = if (bulk) byPartitionDirs(p) else p
+    arranged.write.partitionBy(partCols: _*).mode(SaveMode.Append).parquet(path)
   }
 
   /** All raw reads go through mergeSchema: tombstone files ([[deleteKeys]])
@@ -75,6 +72,10 @@ class KeyedParquetTable(val path: String, val keyCol: String,
   private def readRaw(spark: SparkSession): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(path)
 
+  private def readData(spark: SparkSession): DataFrame = readRaw(spark).drop(partCols: _*)
+
+  /** Latest-wins resolution: per key, the row with the highest `versionCol`,
+    * then the highest upsert sequence `__v`. */
   private def latestOnly(df: DataFrame, keepVersion: Boolean = false,
                          dropTombstones: Boolean = true): DataFrame = {
     val versioned = if (df.columns.contains("__v")) df else df.withColumn("__v", lit(0L))
@@ -108,9 +109,7 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     * preserve winning tombstones (dropping one would let a replayed old
     * batch win against a vanished delete). */
   def deleteKeys(spark: SparkSession, keys: DataFrame, version: Long): Unit = {
-    val drop = Seq("__v", "__del") ++
-      (if (partitioned) Seq("year", "month", "day", "hour") else Nil)
-    val dataSchema = readRaw(spark).drop(drop: _*).schema
+    val dataSchema = readRaw(spark).drop(Seq("__v", "__del") ++ partCols: _*).schema
     val keyField = dataSchema(keyCol)
     val row = dataSchema.fields.map { f =>
       if (f.name == keyCol) col(keyCol).cast(keyField.dataType).as(f.name)
@@ -125,16 +124,10 @@ class KeyedParquetTable(val path: String, val keyCol: String,
       .exists(new Path(path))
 
   /** S7 — offline full-history scan (all versions, duplicates included). */
-  def readAll(spark: SparkSession): DataFrame = {
-    val df = readRaw(spark).drop("__v")
-    if (partitioned) df.drop("year", "month", "day", "hour") else df
-  }
+  def readAll(spark: SparkSession): DataFrame = readData(spark).drop("__v")
 
   /** S8/online — latest version per key (version col, then upsert sequence). */
-  def readLatest(spark: SparkSession): DataFrame = {
-    val df = readRaw(spark)
-    latestOnly(if (partitioned) df.drop("year", "month", "day", "hour") else df)
-  }
+  def readLatest(spark: SparkSession): DataFrame = latestOnly(readData(spark))
 
   /** Time travel: the table state AS OF upsert sequence `version`
     * (inclusive) — latest-wins resolution over only the versions committed
@@ -146,25 +139,20 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     * `__v` stats overlap it, not the whole history. Output carries the
     * originating upsert sequence as `version`. */
   def readAsOf(spark: SparkSession, version: Long): DataFrame = {
-    val df = readRaw(spark).filter(col("__v") <= version)
-    val resolved = latestOnly(
-      if (partitioned) df.drop("year", "month", "day", "hour") else df,
-      keepVersion = true)
-    resolved.withColumnRenamed("__v", "version")
+    latestOnly(readData(spark).filter(col("__v") <= version), keepVersion = true)
+      .withColumnRenamed("__v", "version")
   }
 
   /** S8 — point lookup of the latest record for one key. Partition pruning:
     * the key prefix maps directly to y/m/d/h partition values, so the scan
     * touches exactly one hour partition. */
   def getRecord(spark: SparkSession, key: String): DataFrame = {
-    val base = readRaw(spark)
-    val pruned = if (partitioned)
-      base.filter(col("year") === key.substring(0, 4) &&
+    val pruned = readRaw(spark)
+      .filter(col("year") === key.substring(0, 4) &&
         col("month") === key.substring(5, 7) &&
         col("day") === key.substring(8, 10) &&
         col("hour") === key.substring(11, 13))
-        .drop("year", "month", "day", "hour")
-    else base
+      .drop(partCols: _*)
     latestOnly(pruned.filter(col(keyCol) === key))
   }
 
@@ -183,70 +171,38 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     * least its winner — so the dynamic overwrite rewrites exactly the
     * directories that exist. */
   def truncateHistory(spark: SparkSession, keepFrom: Long): Unit = {
-    val raw = readRaw(spark)
-    val base = if (partitioned) raw.drop("year", "month", "day", "hour") else raw
-    val versioned =
-      if (base.columns.contains("__v")) base else base.withColumn("__v", lit(0L))
-    val ord =
-      if (versioned.columns.contains(versionCol))
-        Seq(col(versionCol).desc, col("__v").desc)
-      else Seq(col("__v").desc)
-    val w = Window.partitionBy(col(keyCol)).orderBy(ord: _*)
-    if (partitioned) {
-      // Rewrite ONLY the hour partitions that actually drop rows (r11
-      // verdict task 5): truncation removes exactly the superseded
-      // pre-keepFrom versions, so a partition is affected iff some key in
-      // it has ≥2 rows at __v ≤ keepFrom — and every version of a key
-      // lives in that key's own hour dir (the partition values derive from
-      // the key), so the test is partition-local and EXACT, not
-      // conservative. The detection pass is one scan with the __v bound in
-      // PushedFilters plus a narrow count; the common retention cadence —
-      // truncate more often than history accumulates — then costs a scan,
-      // not a 100% table rewrite (o25's fixture: zero affected partitions,
-      // formerly a full rewrite).
-      val affected = withPartitionCols(versioned.filter(col("__v") <= keepFrom))
-        .groupBy(col("year"), col("month"), col("day"), col("hour"), col(keyCol))
-        .agg(count(lit(1)).as("__c")).filter(col("__c") > 1)
-        .select(col("year"), col("month"), col("day"), col("hour"))
-        .distinct().collect() // bounded by #hour partitions, never rows
-      if (affected.isEmpty) return
-      val partsDf = broadcast(spark.createDataFrame(affected.toSeq.map(r =>
-          (r.getString(0), r.getString(1), r.getString(2), r.getString(3))))
-        .toDF("year", "month", "day", "hour"))
-      // winners are computed over the affected partitions only — correct
-      // because the per-key window never crosses an hour-dir boundary
-      val scoped = withPartitionCols(versioned)
-        .join(partsDf, Seq("year", "month", "day", "hour"))
-        .drop("year", "month", "day", "hour")
-      val oldWinners = scoped.filter(col("__v") <= keepFrom)
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-      val keep = oldWinners.unionByName(scoped.filter(col("__v") > keepFrom))
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        byPartitionDirs(withPartitionCols(keep))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("year", "month", "day", "hour").parquet(path)
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
-      }
-    } else {
-      val oldWinners = versioned.filter(col("__v") <= keepFrom)
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-      val keep = oldWinners.unionByName(versioned.filter(col("__v") > keepFrom))
-      // unpartitioned: no per-directory overwrite to lean on — write the
-      // keep-set beside the table, then swap directories
-      val fs = fileSystem(spark)
-      val tmp = new Path(path + "__truncate_tmp")
-      keep.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      fs.delete(new Path(path), true)
-      fs.rename(tmp, new Path(path))
-    }
+    val versioned = readData(spark)
+    // Rewrite ONLY the hour partitions that actually drop rows (r11
+    // verdict task 5): truncation removes exactly the superseded
+    // pre-keepFrom versions, so a partition is affected iff some key in
+    // it has ≥2 rows at __v ≤ keepFrom — and every version of a key
+    // lives in that key's own hour dir (the partition values derive from
+    // the key), so the test is partition-local and EXACT, not
+    // conservative. The detection pass is one scan with the __v bound in
+    // PushedFilters plus a narrow count; the common retention cadence —
+    // truncate more often than history accumulates — then costs a scan,
+    // not a 100% table rewrite (o25's fixture: zero affected partitions,
+    // formerly a full rewrite).
+    val affected = withPartitionCols(versioned.filter(col("__v") <= keepFrom))
+      .groupBy(col("year"), col("month"), col("day"), col("hour"), col(keyCol))
+      .agg(count(lit(1)).as("__c")).filter(col("__c") > 1)
+      .select(col("year"), col("month"), col("day"), col("hour"))
+      .distinct().collect() // bounded by #hour partitions, never rows
+    if (affected.isEmpty) return
+    val partsDf = broadcast(spark.createDataFrame(affected.toSeq.map(r =>
+        (r.getString(0), r.getString(1), r.getString(2), r.getString(3))))
+      .toDF("year", "month", "day", "hour"))
+    // winners are computed over the affected partitions only — correct
+    // because the per-key window never crosses an hour-dir boundary
+    val scoped = withPartitionCols(versioned)
+      .join(partsDf, partCols)
+      .drop(partCols: _*)
+    val oldWinners = latestOnly(scoped.filter(col("__v") <= keepFrom),
+      keepVersion = true, dropTombstones = false)
+    val keep = oldWinners.unionByName(scoped.filter(col("__v") > keepFrom))
+    byPartitionDirs(withPartitionCols(keep))
+      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCols: _*).parquet(path)
   }
 
   /** S9/O6 — per-partition compaction, the reference's hourly Glue job
@@ -278,7 +234,7 @@ class KeyedParquetTable(val path: String, val keyCol: String,
         .filter(s => s.isDirectory && !s.getPath.getName.startsWith("_") &&
           !s.getPath.getName.startsWith("."))
         .flatMap(s => leafDirs(s.getPath, depth - 1))
-    if (!partitioned || !fs.exists(root)) Seq.empty else leafDirs(root, 4)
+    if (!fs.exists(root)) Seq.empty else leafDirs(root, 4)
   }
 
   /** Partition values (year, month, day, hour) of an hour directory, parsed
@@ -308,7 +264,6 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     * the same contract: it compacts *previous* hours on a cadence). */
   def compact(spark: SparkSession, targetFileBytes: Long = 512L * 1024 * 1024,
               excludeHourPrefixes: Set[String] = Set.empty): Unit = {
-    if (!partitioned) return
     val fs = fileSystem(spark)
     // discover hour prefixes with >1 file (FeatureStoreAggregateParquet.py:52-58)
     val plan = hourDirs(spark).flatMap { dir =>
@@ -332,8 +287,8 @@ class KeyedParquetTable(val path: String, val keyCol: String,
       s"$path/year=$y/month=$m/day=$d/hour=$h" }
     val todo = spark.read.option("mergeSchema", "true")
       .option("basePath", path).parquet(planDirs: _*)
-      .join(broadcast(planDf), Seq("year", "month", "day", "hour"))
-      .drop("year", "month", "day", "hour")
+      .join(broadcast(planDf), partCols)
+      .drop(partCols: _*)
     // keep each survivor's original __v: resetting it would let a replayed
     // foreachBatch (same batchId, higher __v than 0) win over the newer
     // compacted value
@@ -343,18 +298,9 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     // dynamic overwrite replaces the original directories)
     val ready = withPartitionCols(compacted)
       .withColumn("__salt", pmod(xxhash64(col(keyCol)), col("__n")))
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      byPartitionDirs(ready, extra = Seq("__salt"))
-        .drop("__salt", "__n")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("year", "month", "day", "hour").parquet(path)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    byPartitionDirs(ready, extra = Seq("__salt"))
+      .drop("__salt", "__n")
+      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCols: _*).parquet(path)
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import graft.queries.{Kind, Registry}
 import graft.streaming.Sinks
 
 /** Driver-contract invariants plus the auxiliary sinks (S5 raw archive,
@@ -12,18 +13,27 @@ class ContractAndSinksSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every query has an oracle and vice versa") {
-    assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
+  test("registry: 344 unique names, 316 throughput") {
+    val all = Registry.all
+    assert(all.map(_.name).distinct.size === 344)
+    assert(all.count(_.kind == Kind.Throughput) === 316)
   }
 
   test("maintenance set: registered queries, 28 of them, every e2e replay in it") {
     val keys = SparkEntry.queries.keySet
-    assert(SparkEntry.maintenance.subsetOf(keys),
-      s"unregistered: ${SparkEntry.maintenance -- keys}")
-    assert(SparkEntry.maintenance.size === 28)
+    val maintenance = Registry.all.filter(_.kind == Kind.Maintenance).map(_.name).toSet
+    assert(maintenance.subsetOf(keys), s"unregistered: ${maintenance -- keys}")
+    assert(maintenance.size === 28)
     val replays = keys.filter(_.startsWith("e2e_"))
-    assert(replays.subsetOf(SparkEntry.maintenance),
-      s"replays outside the maintenance set: ${replays -- SparkEntry.maintenance}")
+    assert(replays.nonEmpty && replays.subsetOf(maintenance),
+      s"replays outside the maintenance set: ${replays -- maintenance}")
+  }
+
+  test("registry: a name declared twice fails construction") {
+    val q = Registry.all.head
+    val e = intercept[IllegalArgumentException](
+      Registry.unique(Seq(q, q.copy(oracle = "SELECT 1"))))
+    assert(e.getMessage.contains(q.name))
   }
 
   test("raw archive sink persists the unparsed stream verbatim") {

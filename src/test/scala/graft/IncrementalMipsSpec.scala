@@ -117,7 +117,7 @@ class IncrementalMipsSpec extends SparkSpec {
 
   test("retention: truncateHistory preserves states >= keepFrom, drops earlier rows") {
     val dir = tmpDir("trunc")
-    val t = new KeyedParquetTable(s"$dir/t", "k", partitioned = false)
+    val t = new KeyedParquetTable(s"$dir/t", "k")
     t.upsert(Seq(("2024-01-01 00:00:00", 1L)).toDF("k", "n"), 0)
     t.upsert(Seq(("2024-01-01 00:00:00", 2L), ("2024-01-01 00:01:00", 5L)).toDF("k", "n"), 1)
     t.upsert(Seq(("2024-01-01 00:01:00", 7L)).toDF("k", "n"), 2)
@@ -403,7 +403,7 @@ class IncrementalMipsSpec extends SparkSpec {
 
   test("time travel: readAsOf reconstructs each historical state") {
     val dir = tmpDir("asof")
-    val t = new KeyedParquetTable(s"$dir/t", "k", partitioned = false)
+    val t = new KeyedParquetTable(s"$dir/t", "k")
     t.upsert(Seq(("2024-01-01 00:00:00", 1L)).toDF("k", "n"), 0)
     t.upsert(Seq(("2024-01-01 00:00:00", 2L), ("2024-01-01 00:01:00", 5L)).toDF("k", "n"), 1)
     t.upsert(Seq(("2024-01-01 00:01:00", 7L)).toDF("k", "n"), 2)

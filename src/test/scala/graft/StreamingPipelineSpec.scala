@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.store.KeyedParquetTable
 import graft.streaming.Pipeline
 
@@ -61,20 +62,33 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(m1Versions >= 2, "re-emitted window should append a new version")
   }
 
+  /** Waits until `q`'s batches have consumed `rows` input rows in total.
+    * With ProcessingTimeTimeout every trigger runs a timeout-check batch, so
+    * neither an AvailableNow run nor processAllAvailable() returns on its
+    * own; the query's progress is the signal that the input is in the sink. */
+  private def awaitConsumed(q: StreamingQuery, rows: Long): Unit = {
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (q.recentProgress.map(_.numInputRows).sum < rows) {
+      q.exception.foreach(e => throw e)
+      assert(System.nanoTime() < deadline, s"${q.name}: $rows input rows not consumed in 60 s")
+      Thread.sleep(50)
+    }
+  }
+
   test("processing-time TTL dedup admits first row and drops dupes within TTL") {
     import graft.streaming.StreamDedup
     val input = MemoryStream[(String, Int)](spark)
     val out = StreamDedup.processingTimeTtl(
       input.toDF().toDF("hash", "fee"), "hash", ttlMs = 60 * 60 * 1000L)
-    // NB: with ProcessingTimeTimeout the engine schedules timeout-check
-    // batches forever, so processAllAvailable never settles — use an
-    // AvailableNow run that drains the input and stops.
-    input.addData(("h1", 1), ("h1", 2), ("h2", 3))
-    input.addData(("h1", 4), ("h3", 5))
     val q = out.writeStream.format("memory").queryName("ttl_dedup")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    try q.awaitTermination(120000L) finally q.stop()
+      .outputMode("append").trigger(Trigger.ProcessingTime(100)).start()
+    try {
+      // two batches: duplicates inside one batch, then across batches
+      input.addData(("h1", 1), ("h1", 2), ("h2", 3))
+      awaitConsumed(q, 3)
+      input.addData(("h1", 4), ("h3", 5))
+      awaitConsumed(q, 5)
+    } finally q.stop()
     val rows = spark.table("ttl_dedup").as[(String, Int)].collect().toMap
     assert(rows.keySet === Set("h1", "h2", "h3"))
     assert(rows("h1") === 1, "first h1 row wins; later dupes dropped")
@@ -86,21 +100,20 @@ class StreamingPipelineSpec extends SparkSpec {
     val ckpt = tmpDir("ttl_ckpt")
     val in = tmpDir("ttl_in")
     val sink = tmpDir("ttl_sink")
-    def runOnce(): Unit = {
+    def runOnce(rows: Long): Unit = {
       val raw = spark.readStream.text(in)
         .selectExpr("split(value, ',')[0] AS hash", "CAST(split(value, ',')[1] AS INT) AS fee")
       val out = StreamDedup.processingTimeTtl(raw, "hash", ttlMs = 500L)
       val q = out.writeStream.format("parquet")
         .option("path", sink).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      try q.awaitTermination(120000L) finally q.stop()
+        .outputMode("append").trigger(Trigger.ProcessingTime(100)).start()
+      try awaitConsumed(q, rows) finally q.stop()
     }
     Files.writeString(Paths.get(s"$in/f1.txt"), "k,1\nk,9")
-    runOnce()
+    runOnce(rows = 2)
     Thread.sleep(1200) // TTL (500 ms) elapses between runs
     Files.writeString(Paths.get(s"$in/f2.txt"), "k,2")
-    runOnce()
+    runOnce(rows = 1)
     val rows = spark.read.parquet(sink).as[(String, Int)].collect().map(_._2).sorted
     assert(rows.toSeq === Seq(1, 2),
       "first admission wins in run 1; expired key admitted afresh in run 2")

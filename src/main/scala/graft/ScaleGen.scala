@@ -49,13 +49,14 @@ object ScaleGen {
     spark.sparkContext.setLogLevel("WARN")
     // events.ts encoding varies across testdata generations (TIMESTAMP(NANOS),
     // timestamp[us] NTZ/UTC). Surface legacy nanos as a raw long and copy
-    // whatever we read verbatim; Tables.events adapts to all three on read.
+    // whatever we read verbatim (Tables.load, not Tables.events); Tables.events
+    // adapts to all three on read.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-    def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String): DataFrame = Tables.load(spark, src, t)
     def write(df: DataFrame, t: String): Unit = {
       df.write.mode(SaveMode.Overwrite).parquet(s"$out/$t.parquet")
-      println(s"[scalegen] $t: ${spark.read.parquet(s"$out/$t.parquet").count()} rows")
+      println(s"[scalegen] $t: ${Tables.load(spark, out, t).count()} rows")
     }
 
     // key bases: one offset unit per surrogate key space

@@ -936,9 +936,8 @@ private[queries] object OperatorQueries {
           lit("1970-01-01").as("day"), lit(-1L).as("n_events"),
           lit(-1L).as("cents")))
       val audits = Seq(
-        Audit("no_null_keys", _.filter(col("event_type").isNull ||
-          col("day").isNull).count()),
-        Audit("nonneg_counts", _.filter(col("n_events") < 0).count()))
+        Audit("no_null_keys", col("event_type").isNull || col("day").isNull),
+        Audit("nonneg_counts", col("n_events") < 0))
       val (ok1, _) = writeAuditPublish(clean, work, 1L, audits)
       val (ok2, r2) = writeAuditPublish(poisoned, work, 2L, audits)
       require(ok1 && !ok2 && r2.exists(_._2 > 0),

@@ -233,8 +233,12 @@ private[queries] object TextQueries {
 
     // T37 — readability (Flesch reading ease): exact integer components —
     // words, sentence runs ([.!?]+, floored at 1), syllable proxy = vowel
-    // groups — plus the classic score as one mirrored double chain behind
-    // %.4f. One narrow codegen scan.
+    // groups — plus the classic score, 206.835 − 1.015·w/s − 84.6·syl/w,
+    // computed exactly from those integers:
+    //   score·10⁴ = (2068350·s·w − 10150·w² − 846000·syl·s) / (s·w),
+    // rounded half away from zero by integer division and rendered with 4
+    // decimals. (A double chain behind %.4f rounded some ties differently
+    // from DuckDB's.) One narrow codegen scan.
     Query("t37_readability", Throughput, (s, dir) =>
       docs(s, dir).filter(TextOps.tokenCount(col("text")) >= 1)
         .select(col("doc_id"),
@@ -243,24 +247,28 @@ private[queries] object TextQueries {
             .cast("long").as("sentences"),
           regexp_count(lower(col("text")), lit("[aeiou]+"))
             .cast("long").as("syllables"))
-        .withColumn("flesch_r", Exact.fmt(
-          lit(206.835)
-            - lit(1.015) * (col("words").cast("double") / col("sentences").cast("double"))
-            - lit(84.6) * (col("syllables").cast("double") / col("words").cast("double")),
-          4)),
-      """SELECT doc_id,
-        |  CAST(len(regexp_split_to_array(trim(text, ' '), '\s+')) AS BIGINT) AS words,
-        |  CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS BIGINT) AS sentences,
-        |  CAST(len(regexp_extract_all(lower(text), '[aeiou]+')) AS BIGINT) AS syllables,
-        |  printf('%.4f', CAST('206.835' AS DOUBLE)
-        |    - CAST('1.015' AS DOUBLE)
-        |      * (CAST(len(regexp_split_to_array(trim(text, ' '), '\s+')) AS DOUBLE)
-        |         / CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS DOUBLE))
-        |    - CAST('84.6' AS DOUBLE)
-        |      * (CAST(len(regexp_extract_all(lower(text), '[aeiou]+')) AS DOUBLE)
-        |         / CAST(len(regexp_split_to_array(trim(text, ' '), '\s+')) AS DOUBLE))
-        |  ) AS flesch_r
-        |FROM documents WHERE trim(text, ' ') <> ''""".stripMargin),
+        .withColumn("num", expr(
+          "2068350 * sentences * words - 10150 * words * words - 846000 * syllables * sentences"))
+        .withColumn("r4", expr(
+          "(abs(num) * 2 + sentences * words) div (2 * sentences * words)"))
+        .withColumn("flesch_r", expr(
+          """concat(if(num < 0 AND r4 > 0, '-', ''), cast(r4 div 10000 AS STRING), '.',
+            |  lpad(cast(r4 % 10000 AS STRING), 4, '0'))""".stripMargin))
+        .drop("num", "r4"),
+      """WITH c AS (SELECT doc_id,
+        |    CAST(len(regexp_split_to_array(trim(text, ' '), '\s+')) AS BIGINT) AS words,
+        |    CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS BIGINT) AS sentences,
+        |    CAST(len(regexp_extract_all(lower(text), '[aeiou]+')) AS BIGINT) AS syllables
+        |  FROM documents WHERE trim(text, ' ') <> ''),
+        |n AS (SELECT *, 2068350 * sentences * words - 10150 * words * words
+        |    - 846000 * syllables * sentences AS num FROM c),
+        |r AS (SELECT *, (abs(num) * 2 + sentences * words) // (2 * sentences * words) AS r4
+        |  FROM n)
+        |SELECT doc_id, words, sentences, syllables,
+        |  CASE WHEN num < 0 AND r4 > 0 THEN '-' ELSE '' END
+        |    || CAST(r4 // 10000 AS VARCHAR) || '.'
+        |    || lpad(CAST(r4 % 10000 AS VARCHAR), 4, '0') AS flesch_r
+        |FROM r""".stripMargin),
 
     // T34 — calibration audit (reliability relation) for the vowel-density
     // language scorer: treating vowel density in basis points as the

@@ -4,7 +4,8 @@ import java.util.EnumSet
 
 import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path => HPath}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.count_if
 
 /** Write-Audit-Publish (the staged-commit pattern table formats run under
   * names like branch + audit + fast-forward): a candidate snapshot is
@@ -36,30 +37,37 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * gen overwrites (and vacuum can reclaim); a crash after staging leaves an
   * orphan gen dir that is invisible (manifest-excluded) and reclaimable by
   * a vacuum of non-published generations. Scale: the staged write is the
-  * query's own distributed write; audits are ordinary Spark aggregates over
+  * query's own distributed write; the audits are one Spark aggregate over
   * the staged relation; the publish step itself is ONE metadata rename
   * regardless of data size.
   */
 object WriteAuditPublish {
 
-  /** A named audit: returns the number of violating rows in the staged
-    * candidate (0 = pass). */
-  final case class Audit(name: String, violations: DataFrame => Long)
+  /** A named audit: `violation` is a row predicate over the staged
+    * candidate; the audit passes when no row satisfies it (a null result
+    * is not a violation, as in a `filter`). */
+  final case class Audit(name: String, violation: Column)
 
   private def fileContext(p: HPath): FileContext =
     FileContext.getFileContext(
       p.toUri, SparkSession.active.sessionState.newHadoopConf())
 
   /** Stage `candidate` under `dir/stage/gen=<gen>`, audit the STAGED
-    * relation, and publish atomically iff every audit returns 0.
-    * Returns (published, per-audit violation counts). */
+    * relation, and publish atomically iff no audit finds a violating row.
+    * All audits are counted in one aggregate over the staged relation (one
+    * `count_if` per audit). Returns (published, per-audit violation counts). */
   def writeAuditPublish(candidate: DataFrame, dir: String, gen: Long,
       audits: Seq[Audit]): (Boolean, Seq[(String, Long)]) = {
     val spark = candidate.sparkSession
     val stage = s"$dir/stage/gen=$gen"
     candidate.write.mode("overwrite").parquet(stage)
     val staged = spark.read.parquet(stage)
-    val results = audits.map(a => a.name -> a.violations(staged))
+    val results =
+      if (audits.isEmpty) Nil
+      else {
+        val counts = staged.select(audits.map(a => count_if(a.violation)): _*).head()
+        audits.zipWithIndex.map { case (a, i) => a.name -> counts.getLong(i) }
+      }
     val ok = results.forall(_._2 == 0L)
     if (ok) publishManifest(dir, gen)
     (ok, results)

@@ -10,8 +10,8 @@ import graft.store.WriteAuditPublish._
 class WapSpec extends SparkSpec {
 
   private def audits = Seq(
-    Audit("no_null_keys", _.filter(col("k").isNull).count()),
-    Audit("nonneg", _.filter(col("v") < 0).count()))
+    Audit("no_null_keys", col("k").isNull),
+    Audit("nonneg", col("v") < 0))
 
   test("clean candidate publishes; poisoned candidate stays invisible") {
     import spark.implicits._
@@ -32,6 +32,21 @@ class WapSpec extends SparkSpec {
       Set(("a", 1L), ("b", 2L)))
     // the poisoned bytes exist ONLY in the unpublished staging area
     assert(Files.exists(Paths.get(dir, "stage", "gen=2")))
+  }
+
+  test("a candidate breaking both audits reports each audit's own count and does not publish") {
+    import spark.implicits._
+    val dir = tmpDir("wap-both")
+    val bad = Seq(("a", 1L), (null, 2L), (null, -3L), ("b", -4L), ("c", -5L), ("d", 6L))
+      .toDF("k", "v")
+    val (ok, r) = writeAuditPublish(bad, dir, 1L, audits)
+    assert(!ok)
+    assert(publishedGen(dir).isEmpty, "a failed candidate must not publish")
+    // one count per audit, each equal to a separate count() of its
+    // violations over the staged bytes
+    val staged = spark.read.parquet(s"$dir/stage/gen=1")
+    assert(r === audits.map(a => a.name -> staged.filter(a.violation).count()))
+    assert(r === Seq("no_null_keys" -> 2L, "nonneg" -> 3L))
   }
 
   test("crash between stage and publish leaves the old generation serving; dead writer's tmp is inert") {

@@ -58,16 +58,13 @@ object WriteAuditPublish {
     * `count_if` per audit). Returns (published, per-audit violation counts). */
   def writeAuditPublish(candidate: DataFrame, dir: String, gen: Long,
       audits: Seq[Audit]): (Boolean, Seq[(String, Long)]) = {
+    require(audits.nonEmpty, "writeAuditPublish needs at least one audit")
     val spark = candidate.sparkSession
     val stage = s"$dir/stage/gen=$gen"
     candidate.write.mode("overwrite").parquet(stage)
     val staged = spark.read.parquet(stage)
-    val results =
-      if (audits.isEmpty) Nil
-      else {
-        val counts = staged.select(audits.map(a => count_if(a.violation)): _*).head()
-        audits.zipWithIndex.map { case (a, i) => a.name -> counts.getLong(i) }
-      }
+    val counts = staged.select(audits.map(a => count_if(a.violation)): _*).head()
+    val results = audits.zipWithIndex.map { case (a, i) => a.name -> counts.getLong(i) }
     val ok = results.forall(_._2 == 0L)
     if (ok) publishManifest(dir, gen)
     (ok, results)

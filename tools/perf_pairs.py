@@ -3,12 +3,14 @@
 
 Runs `perfbench/run.py` in two source checkouts, one pair per seed, and
 alternates which side runs first (pair 0: parent first). Each run's stdout
-is saved under --out, with the 1-minute load average before the run (a run
-already saved there is read back, not run again). Then,
-for every end-to-end metric, it prints each side's median and quartiles, the
-change's wins (ties count for neither side), the parent's IQR, and whether
-the gain rule holds: the change wins at least 9/10 of the pairs and the
-medians differ by more than the parent's IQR, in the better direction.
+is saved under --out (overwriting a file of the same name), with the
+checkout directory, the exit code and the 1-minute load average before the
+run; a run that exits non-zero counts as failed. Each run lasts the
+`run_seconds` of BENCHMARK.json. Then, for every end-to-end metric, it
+prints each side's median and quartiles, the change's wins (ties count for
+neither side), the parent's IQR, and whether the gain rule holds: the
+change wins at least 9/10 of the pairs and the medians differ by more
+than the parent's IQR, in the better direction.
 
     python3 tools/perf_pairs.py PARENT_DIR CHANGE_DIR --workload batch_sf0.1 \
         --seeds 1-10 --out /tmp/pairs
@@ -33,21 +35,20 @@ def seeds(spec):
 
 
 def run(checkout, workload, seed, seconds, path):
-    if not os.path.exists(path):  # a saved run is reused: an interrupted set resumes
-        load1 = os.getloadavg()[0]
-        p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload, "--seed",
-                            str(seed), "--seconds", str(seconds), "--trace", "0"],
-                           cwd=checkout, capture_output=True, text=True)
-        with open(path, "w") as f:
-            f.write(f"# load1_before={load1:.2f} exit={p.returncode}\n{p.stdout}")
-    with open(path) as f:
-        lines = f.read().strip().splitlines()
+    load1 = os.getloadavg()[0]
+    p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload, "--seed",
+                        str(seed), "--seconds", str(seconds), "--trace", "0"],
+                       cwd=checkout, capture_output=True, text=True)
+    header = f"load1_before={load1:.2f} exit={p.returncode} checkout={checkout}"
+    with open(path, "w") as f:
+        f.write(f"# {header}\n{p.stdout}")
+    lines = p.stdout.strip().splitlines()
     try:
-        res = json.loads(lines[-1])
-    except ValueError:
+        res = json.loads(lines[-1]) if p.returncode == 0 else {}
+    except (ValueError, IndexError):
         res = {}
     metrics = {k: v["value"] for k, v in res.get("metrics", {}).items()}
-    print(f"{os.path.basename(path)}: {lines[0][2:]} correct={res.get('correct')} "
+    print(f"{os.path.basename(path)}: {header} correct={res.get('correct')} "
           f"failed={res.get('failed')} " + " ".join(f"{k}={v:.3f}" for k, v in metrics.items()),
           flush=True)
     return dict(res, metrics=metrics)
@@ -63,16 +64,16 @@ def main():
     ap.add_argument("change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="e.g. 1-10 or 3,5,8")
-    ap.add_argument("--seconds", type=int, default=11)
     ap.add_argument("--out", required=True)
     a = ap.parse_args()
     os.makedirs(a.out, exist_ok=True)
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
-        better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+        bench = json.load(f)
+    better = {m["name"]: m["better"] for m in bench["end_to_end"]}
     pairs = []
     for i, s in enumerate(seeds(a.seeds)):
         sides = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
-        got = {side: run(getattr(a, side), a.workload, s, a.seconds,
+        got = {side: run(getattr(a, side), a.workload, s, bench["run_seconds"],
                          os.path.join(a.out, f"{a.workload}_pair{i:02d}_seed{s}_{side}.txt"))
                for side in sides}
         pairs.append(got)

@@ -1,7 +1,7 @@
 package graft
 package queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -915,9 +915,9 @@ private[queries] object OperatorQueries {
         |GROUP BY 1, 2""".stripMargin),
 
     // O42 — write-audit-publish under the read gate: gen-1 (the clean
-    // daily aggregate) publishes; gen-2 (the same aggregate POISONED with
-    // a null-keyed negative row — the writer-bug class WAP exists to
-    // catch) fails its audits and must stay invisible. The served result
+    // daily aggregate) publishes; gen-2 (the published gen-1 snapshot
+    // POISONED with a null-keyed negative row — the writer-bug class WAP
+    // exists to catch) fails its audits and must stay invisible. The served result
     // is whatever the manifest resolves — if the poisoned candidate ever
     // published, or the clean one failed to, the DuckDB recompute
     // hash-mismatches. Audits run over the STAGED bytes, not the input
@@ -931,14 +931,15 @@ private[queries] object OperatorQueries {
           date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"))
         .agg(count(lit(1)).as("n_events"),
           sum(floor(col("value") * 100).cast("long")).as("cents"))
-      val poisoned = clean.unionByName(
-        s.range(1).select(lit(null).cast("string").as("event_type"),
-          lit("1970-01-01").as("day"), lit(-1L).as("n_events"),
-          lit(-1L).as("cents")))
       val audits = Seq(
         Audit("no_null_keys", col("event_type").isNull || col("day").isNull),
         Audit("nonneg_counts", col("n_events") < 0))
       val (ok1, _) = writeAuditPublish(clean, work, 1L, audits)
+      // the next candidate derives from the published snapshot, as a next
+      // WAP generation does: gen 1's audited bytes plus one bad local row
+      val gen1 = readPublished(s, work)
+      val poisoned = gen1.unionByName(s.createDataFrame(
+        java.util.List.of(Row(null, "1970-01-01", -1L, -1L)), gen1.schema))
       val (ok2, r2) = writeAuditPublish(poisoned, work, 2L, audits)
       require(ok1 && !ok2 && r2.exists(_._2 > 0),
         s"WAP contract violated: ok1=$ok1 ok2=$ok2 r2=$r2")

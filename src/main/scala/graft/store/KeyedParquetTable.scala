@@ -52,13 +52,16 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     * Used directly as a `foreachBatch` sink for streaming update-mode aggs.
     * @param version monotonic sequence (e.g. the streaming batchId) breaking
     *   ties when two upserts of the same key share an `event_time` second —
-    *   the reference's "last put_record wins" needs a total order. */
+    *   the reference's "last put_record wins" needs a total order.
+    * @param bulk the caller's choice: co-locate each hour partition into one
+    *   task (one extra shuffle of the batch's rows) so the append writes one
+    *   file per directory instead of one per task. Without it, compact()
+    *   collapses the small files on cadence. `Pipeline.writer` takes it on
+    *   every batch, live ones included: its batches arrive in
+    *   shuffle-partition layout, and an AvailableNow replay batch spans
+    *   hundreds of hour directories (see its doc). */
   def upsert(batch: DataFrame, version: Long = 0L, bulk: Boolean = false): Unit = {
     val p = withPartitionCols(batch.withColumn("__v", lit(version)))
-    // bulk (backfill) loads: co-locate each hour partition into one task so
-    // the append writes one file per directory instead of one per task —
-    // streaming micro-batches skip this (few open windows, extra shuffle
-    // not worth it; compact() collapses their small files on cadence)
     val arranged = if (bulk) byPartitionDirs(p) else p
     arranged.write.partitionBy(partCols: _*).mode(SaveMode.Append).parquet(path)
   }

@@ -4,8 +4,10 @@ import java.util.EnumSet
 
 import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path => HPath}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.count_if
+
+import graft.Tables
 
 /** Write-Audit-Publish (the staged-commit pattern table formats run under
   * names like branch + audit + fast-forward): a candidate snapshot is
@@ -37,9 +39,12 @@ import org.apache.spark.sql.functions.count_if
   * gen overwrites (and vacuum can reclaim); a crash after staging leaves an
   * orphan gen dir that is invisible (manifest-excluded) and reclaimable by
   * a vacuum of non-published generations. Scale: the staged write is the
-  * query's own distributed write; the audits are one Spark aggregate over
-  * the staged relation; the publish step itself is ONE metadata rename
-  * regardless of data size.
+  * query's own distributed write; the staged relation's schema comes from
+  * its parquet footer, read on the driver ([[graft.Tables.read]], no Spark
+  * job); the audits are ONE observed scan of the staged bytes (one
+  * `count_if` per audit, no shuffle, one job); the publish step itself is
+  * ONE metadata rename regardless of data size. [[readPublished]] of the
+  * generation just audited reuses that resolved schema and starts no job.
   */
 object WriteAuditPublish {
 
@@ -54,17 +59,22 @@ object WriteAuditPublish {
 
   /** Stage `candidate` under `dir/stage/gen=<gen>`, audit the STAGED
     * relation, and publish atomically iff no audit finds a violating row.
-    * All audits are counted in one aggregate over the staged relation (one
-    * `count_if` per audit). Returns (published, per-audit violation counts). */
+    * All audits are counted in one scan of the staged relation: one
+    * `count_if` per audit, observed (`Dataset.observe`) while a `noop` sink
+    * drains the scan, so there is no global aggregate and no shuffle.
+    * Returns (published, per-audit violation counts). */
   def writeAuditPublish(candidate: DataFrame, dir: String, gen: Long,
       audits: Seq[Audit]): (Boolean, Seq[(String, Long)]) = {
     require(audits.nonEmpty, "writeAuditPublish needs at least one audit")
     val spark = candidate.sparkSession
     val stage = s"$dir/stage/gen=$gen"
     candidate.write.mode("overwrite").parquet(stage)
-    val staged = spark.read.parquet(stage)
-    val counts = staged.select(audits.map(a => count_if(a.violation)): _*).head()
-    val results = audits.zipWithIndex.map { case (a, i) => a.name -> counts.getLong(i) }
+    val counts = audits.zipWithIndex.map { case (a, i) => count_if(a.violation).as(s"audit$i") }
+    val observation = Observation()
+    Tables.read(spark, stage).observe(observation, counts.head, counts.tail: _*)
+      .write.format("noop").mode("overwrite").save()
+    val observed = observation.get
+    val results = audits.indices.map(i => audits(i).name -> observed(s"audit$i").asInstanceOf[Long])
     val ok = results.forall(_._2 == 0L)
     if (ok) publishManifest(dir, gen)
     (ok, results)
@@ -107,6 +117,6 @@ object WriteAuditPublish {
   def readPublished(spark: SparkSession, dir: String): DataFrame = {
     val gen = publishedGen(dir).getOrElse(
       throw new IllegalStateException(s"no published generation under $dir"))
-    spark.read.parquet(s"$dir/stage/gen=$gen")
+    Tables.read(spark, s"$dir/stage/gen=$gen")
   }
 }

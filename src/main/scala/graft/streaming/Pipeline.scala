@@ -42,10 +42,11 @@ object Pipeline {
     * delivery_stream_to_featurestore/main.py:54-62).
     *
     * `bulk = true`: the update batch arrives in shuffle-partition layout
-    * (32 state partitions), so without hour colocation EVERY touched hour
-    * dir gets up to 32 tiny files PER batch — a 15 s live trigger touches
+    * (`spark.sql.shuffle.partitions` state partitions, nproc under
+    * `LocalSession`), so without hour colocation EVERY touched hour dir gets
+    * up to that many tiny files PER batch — a 15 s live trigger touches
     * 1-2 windows and doesn't care, but an AvailableNow REPLAY batch spans
-    * days (hundreds of dirs × 32 → tens of thousands of files per replay;
+    * days (hundreds of dirs × partitions → tens of thousands of files per replay;
     * measured as the dominant e2e_* wall cost at sf0.1, file I/O not
     * triggers). The colocation exchange moves only the aggregate rows —
     * for the live trigger that's a few rows, for a replay batch ≤ one row

@@ -43,6 +43,14 @@ object StreamDedup {
     * setting a new one, so a duplicate arrival would otherwise cancel
     * expiry and leak the key's state forever.
     *
+    * It cannot finish a bounded run: under `ProcessingTimeTimeout` every
+    * trigger runs a timeout-check batch, so an AvailableNow query never
+    * terminates and `processAllAvailable()` never returns (it returned only
+    * when the query was stopped, 60 s later). Drive it with a
+    * ProcessingTime trigger and stop it once its progress shows the input
+    * consumed, as its specs do; ROADMAP item 4 tracks a `transformWithState`
+    * form that may terminate.
+    *
     * Works on streaming Datasets only (uses flatMapGroupsWithState). */
   def processingTimeTtl(df: DataFrame, keyCol: String, ttlMs: Long): DataFrame = {
     implicit val rowEnc: Encoder[Row] = Encoders.row(df.schema)

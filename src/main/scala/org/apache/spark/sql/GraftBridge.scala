@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StructType
 
 /** Minimal visibility bridge: Column ⇄ Expression conversion lives behind
   * `private[sql]` in Spark 4 (`classic.ExpressionUtils`); this re-export is
@@ -21,4 +22,14 @@ object GraftBridge {
     * (The wrapper class is private[classic], hence the second bridge.) */
   def expressionTree(c: Column): Expression =
     classic.GraftClassicBridge.expressionTree(c)
+
+  /** What file-source schema inference does to a footer schema before it
+    * reaches a reader: every field nullable (`StructType.asNullable` is
+    * private[spark]). */
+  def nullable(s: StructType): StructType = s.asNullable
+
+  /** Parquet `mergeSchema`'s pairwise merge (`StructType.merge` is
+    * private[sql]). */
+  def merge(left: StructType, right: StructType, caseSensitive: Boolean): StructType =
+    left.merge(right, caseSensitive)
 }

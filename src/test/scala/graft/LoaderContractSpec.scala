@@ -1,10 +1,7 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
 
 /** Loader contract against the CURRENT driver-generated testdata.
@@ -71,40 +68,15 @@ class LoaderContractSpec extends SparkSpec {
       s"events.ts values decode to year $year — wrong unit interpretation?")
   }
 
-  /** Spark jobs started by `body`, counted by a listener on a job group of
-    * its own. Listener events arrive in order, so once a marker job run
-    * after `body` has been seen, every job of `body` has been counted. */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"loader-probe-${java.util.UUID.randomUUID}"
-    val marker = s"$group-marker"
-    val started = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(started.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      def inGroup(g: String)(f: => Unit): Unit = {
-        sc.setJobGroup(g, g)
-        try f finally sc.clearJobGroup()
-      }
-      inGroup(group)(body)
-      inGroup(marker)(spark.range(1).collect())
-      val deadline = System.nanoTime + 30L * 1000000000L
-      while (!started.contains(marker) && System.nanoTime < deadline) Thread.sleep(10)
-      assert(started.contains(marker), "listener never saw the marker job")
-      started.asScala.count(_ == group)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("schema cache: a second load of an unchanged table starts no Spark job") {
     import spark.implicits._
     val dir = tmpDir("loader-cache")
     Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
-    assert(jobsStartedBy(Tables.load(spark, dir, "t")) > 0,
-      "the first load infers the schema (and shows the job counter works)")
+    // positive control: Spark's own inference starts a job, so the
+    // counter does see jobs
+    assert(jobsStartedBy(spark.read.parquet(s"$dir/t.parquet").schema) >= 1)
+    // the first load reads the footer on the driver, the second hits the cache
+    assert(jobsStartedBy(Tables.load(spark, dir, "t")) === 0)
     assert(jobsStartedBy(Tables.load(spark, dir, "t")) === 0)
     assert(Tables.load(spark, dir, "t").as[(Long, String)].collect().toSet ===
       Set((1L, "a"), (2L, "b")))
@@ -130,5 +102,79 @@ class LoaderContractSpec extends SparkSpec {
     assert(Tables.load(spark, d2, "t").columns.toSeq === Seq("b"))
     assert(Tables.load(spark, d1, "t").as[Long].collect().toSeq === Seq(1L))
     assert(Tables.load(spark, d2, "t").as[String].collect().toSeq === Seq("z"))
+  }
+
+  /** `Tables.read` must resolve exactly the schema Spark infers, in its
+    * DataFrame and in the schema it caches. */
+  private def assertSameSchema(path: String): Unit = {
+    val inferred = spark.read.parquet(path).schema
+    assert(Tables.read(spark, path).schema === inferred, path)
+    assert(Tables.schemaOf(spark, path) === inferred, path)
+  }
+
+  test("read: the driver-side schema equals spark.read.parquet's on multi-file and nested tables") {
+    val dir = tmpDir("loader-resolve")
+    spark.range(0, 100, 1, 4).selectExpr("id", "cast(id AS string) AS s")
+      .write.parquet(s"$dir/multi")
+    assert(Files.list(Paths.get(dir, "multi")).filter(_.toString.endsWith(".parquet")).count() > 1)
+    assertSameSchema(s"$dir/multi")
+    spark.range(5).selectExpr(
+        "named_struct('a', id, 'b', cast(id AS string)) AS st",
+        "array(id, id + 1) AS arr",
+        "map(cast(id AS string), named_struct('x', id)) AS m",
+        "array(named_struct('y', array(id))) AS deep")
+      .write.parquet(s"$dir/nested")
+    assertSameSchema(s"$dir/nested")
+  }
+
+  test("read: a Spark-written non-nullable column comes back nullable, as Spark infers it") {
+    val dir = tmpDir("loader-nullable")
+    val df = spark.range(3).selectExpr("id", "named_struct('a', id) AS st")
+    assert(!df.schema("id").nullable && !df.schema("st").nullable)
+    df.write.parquet(s"$dir/t")
+    assertSameSchema(s"$dir/t")
+    assert(Tables.read(spark, s"$dir/t").schema.forall(_.nullable))
+  }
+
+  test("read: the events fixture under nanosAsLong") {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    assertSameSchema(s"$sfDir/events.parquet")
+  }
+
+  test("read: under mergeSchema every data file's footer is merged") {
+    import spark.implicits._
+    val dir = tmpDir("loader-merge")
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/t")
+    Seq((2L, 2.5)).toDF("k", "w").write.mode("append").parquet(s"$dir/t")
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try {
+      assertSameSchema(s"$dir/t")
+      assert(Tables.read(spark, s"$dir/t").columns.toSet === Set("k", "v", "w"))
+    } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+  }
+
+  test("read: files under a _- or .-prefixed path component are not data, whatever their own name") {
+    import spark.implicits._
+    val dir = tmpDir("loader-hidden")
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/t")
+    Seq(1.5).toDF("other").write.parquet(s"$dir/foreign")
+    val foreign = Files.list(Paths.get(dir, "foreign"))
+      .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get
+    // a running writer's attempt file, named like a data file, and a hidden
+    // file; both sort before the table's own part files
+    val attempt = Paths.get(dir, "t", "_temporary", "0", "part-00000-attempt.parquet")
+    Files.createDirectories(attempt.getParent)
+    Files.copy(foreign, attempt)
+    Files.copy(foreign, Paths.get(dir, "t", ".hidden"))
+    assertSameSchema(s"$dir/t")
+    assert(Tables.read(spark, s"$dir/t").columns.toSeq === Seq("k", "v"))
+  }
+
+  test("read: a partitioned directory is refused, not read without its partition columns") {
+    import spark.implicits._
+    val dir = tmpDir("loader-partitioned")
+    Seq((1L, "a")).toDF("k", "day").write.partitionBy("day").parquet(s"$dir/t")
+    val e = intercept[IllegalArgumentException](Tables.read(spark, s"$dir/t"))
+    assert(e.getMessage.contains("day=a"))
   }
 }

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,4 +29,32 @@ abstract class SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs started by `body`, counted by a listener on a job group of
+    * its own. Listener events arrive in order, so once a marker job run
+    * after `body` has been seen, every job of `body` has been counted. */
+  def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"job-probe-${java.util.UUID.randomUUID}"
+    val marker = s"$group-marker"
+    val started = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(started.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      def inGroup(g: String)(f: => Unit): Unit = {
+        sc.setJobGroup(g, g)
+        try f finally sc.clearJobGroup()
+      }
+      inGroup(group)(body)
+      inGroup(marker)(spark.range(1).collect())
+      val deadline = System.nanoTime + 30L * 1000000000L
+      while (!started.contains(marker) && System.nanoTime < deadline) Thread.sleep(10)
+      assert(started.contains(marker), "listener never saw the marker job")
+      started.asScala.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
 }

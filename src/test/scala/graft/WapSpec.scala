@@ -92,4 +92,41 @@ class WapSpec extends SparkSpec {
     assert(readPublished(spark, dir).as[(String, Long)].collect().toSet ===
       Set(("a", 1L)))
   }
+
+  test("one generation starts no schema-inference job, and its audit is one job") {
+    import spark.implicits._
+    val dir = tmpDir("wap-jobs")
+    val candidate = Seq(("a", 1L), ("b", 2L)).toDF("k", "v")
+    // the same write on its own, to take the staged write's jobs out
+    val writeJobs = jobsStartedBy(candidate.write.parquet(s"$dir/write-only"))
+    val wapJobs = jobsStartedBy(assert(writeAuditPublish(candidate, dir, 1L, audits)._1))
+    // inference would add at least one job and the audit at least one, so
+    // exactly one more job than the write means no inference and a
+    // one-job audit
+    assert(wapJobs - writeJobs === 1, s"write alone $writeJobs jobs, WAP generation $wapJobs")
+  }
+
+  test("readPublished after a publish starts no Spark job") {
+    import spark.implicits._
+    val dir = tmpDir("wap-read")
+    assert(writeAuditPublish(Seq(("a", 1L)).toDF("k", "v"), dir, 1L, audits)._1)
+    assert(jobsStartedBy(readPublished(spark, dir)) === 0)
+    assert(readPublished(spark, dir).as[(String, Long)].collect().toSeq === Seq(("a", 1L)))
+  }
+
+  test("audit counts are the violations in the staged files, even for a non-deterministic candidate") {
+    val dir = tmpDir("wap-nondet")
+    // a fresh coin per evaluation: re-evaluating the candidate instead of
+    // reading the staged bytes gives other null keys, and so (almost
+    // surely, over 200k rows) another count
+    val coin = udf(() => java.util.concurrent.ThreadLocalRandom.current().nextBoolean())
+      .asNondeterministic()
+    val candidate = spark.range(200000).select(
+      when(coin(), lit(null)).otherwise(col("id").cast("string")).as("k"),
+      (col("id") % 7 - 3).as("v"))
+    val (ok, r) = writeAuditPublish(candidate, dir, 1L, audits)
+    assert(!ok)
+    val staged = spark.read.parquet(s"$dir/stage/gen=1")
+    assert(r === audits.map(a => a.name -> staged.filter(a.violation).count()))
+  }
 }

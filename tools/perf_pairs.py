@@ -5,7 +5,11 @@ Runs `perfbench/run.py` in two source checkouts, one pair per seed, and
 alternates which side runs first (pair 0: parent first). Each run's stdout
 is saved under --out (overwriting a file of the same name), with the
 checkout directory, the exit code and the 1-minute load average before the
-run; a run that exits non-zero counts as failed. Each run lasts the
+run, and beside it the run's `.bench_build/runs/<workload>/jvm_result.json`;
+a run that exits non-zero counts as failed. For `batch_sf0.1` each run's
+line names the query that set its `latency_tail_s` (the query whose fastest
+pass is nearest the reported tail), so a tail move can be attributed from
+the saved files alone. Each run lasts the
 `run_seconds` of BENCHMARK.json. Then, for every end-to-end metric, it
 prints each side's median and quartiles, the change's wins (ties count for
 neither side), the parent's IQR, and whether the gain rule holds: the
@@ -21,6 +25,7 @@ It changes nothing under perfbench/; each checkout builds into its own
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -48,10 +53,31 @@ def run(checkout, workload, seed, seconds, path):
     except (ValueError, IndexError):
         res = {}
     metrics = {k: v["value"] for k, v in res.get("metrics", {}).items()}
+    jvm = os.path.join(checkout, ".bench_build", "runs", workload, "jvm_result.json")
+    saved = os.path.splitext(path)[0] + ".jvm_result.json"
+    if os.path.exists(saved):
+        os.remove(saved)
+    tail = ""
+    if p.returncode == 0 and os.path.exists(jvm):
+        shutil.copyfile(jvm, saved)
+        if workload.startswith("batch") and "latency_tail_s" in metrics:
+            name, t = tail_query(saved, metrics["latency_tail_s"])
+            tail = f" tail_query={name} ({t:.3f})"
     print(f"{os.path.basename(path)}: {header} correct={res.get('correct')} "
-          f"failed={res.get('failed')} " + " ".join(f"{k}={v:.3f}" for k, v in metrics.items()),
-          flush=True)
+          f"failed={res.get('failed')} " + " ".join(f"{k}={v:.3f}" for k, v in metrics.items())
+          + tail, flush=True)
     return dict(res, metrics=metrics)
+
+
+def tail_query(jvm_result, tail_s):
+    """The query whose fastest timed pass is nearest the run's tail."""
+    with open(jvm_result) as f:
+        r = json.load(f, parse_constant=lambda c: None)
+    fastest = {}
+    for q in (q for p in r["passes"] for q in p["queries"]):
+        if not (q["error"] or q["timed_out"]):
+            fastest[q["name"]] = min(fastest.get(q["name"], q["total_s"]), q["total_s"])
+    return min(fastest.items(), key=lambda kv: abs(kv[1] - tail_s))
 
 
 def quartiles(xs):

@@ -917,12 +917,12 @@ private[queries] object OperatorQueries {
     // O42 — write-audit-publish under the read gate: gen-1 (the clean
     // daily aggregate) publishes; gen-2 (the published gen-1 snapshot
     // POISONED with a null-keyed negative row — the writer-bug class WAP
-    // exists to catch) fails its audits and must stay invisible. The served result
-    // is whatever the manifest resolves — if the poisoned candidate ever
-    // published, or the clean one failed to, the DuckDB recompute
-    // hash-mismatches. Audits run over the STAGED bytes, not the input
-    // dataframe; publish is one atomic metadata rename regardless of data
-    // size (store/WriteAuditPublish.scala).
+    // exists to catch) fails its audits and must stay invisible. The
+    // served result is whatever the manifest resolves — if the poisoned
+    // candidate ever published, or the clean one failed to, the DuckDB
+    // recompute hash-mismatches. Audits run over the STAGED bytes, not the
+    // input dataframe; publish is one atomic metadata rename regardless of
+    // data size (store/WriteAuditPublish.scala).
     Query("o42_wap_publish", Throughput, (s, dir) => {
       import graft.store.WriteAuditPublish.{Audit, readPublished, writeAuditPublish}
       val work = scratch("o42wap")

@@ -74,7 +74,7 @@ object WriteAuditPublish {
     Tables.read(spark, stage).observe(observation, counts.head, counts.tail: _*)
       .write.format("noop").mode("overwrite").save()
     val observed = observation.get
-    val results = audits.indices.map(i => audits(i).name -> observed(s"audit$i").asInstanceOf[Long])
+    val results = audits.zipWithIndex.map { case (a, i) => a.name -> observed(s"audit$i").asInstanceOf[Long] }
     val ok = results.forall(_._2 == 0L)
     if (ok) publishManifest(dir, gen)
     (ok, results)

@@ -129,4 +129,12 @@ class WapSpec extends SparkSpec {
     val staged = spark.read.parquet(s"$dir/stage/gen=1")
     assert(r === audits.map(a => a.name -> staged.filter(a.violation).count()))
   }
+
+  test("an empty candidate has no violations and publishes") {
+    import spark.implicits._
+    val dir = tmpDir("wap-empty")
+    val (ok, r) = writeAuditPublish(Seq.empty[(String, Long)].toDF("k", "v"), dir, 1L, audits)
+    assert(ok && r === audits.map(_.name -> 0L))
+    assert(readPublished(spark, dir).count() === 0L)
+  }
 }

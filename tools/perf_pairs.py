@@ -6,10 +6,10 @@ alternates which side runs first (pair 0: parent first). Each run's stdout
 is saved under --out (overwriting a file of the same name), with the
 checkout directory, the exit code and the 1-minute load average before the
 run, and beside it the run's `.bench_build/runs/<workload>/jvm_result.json`;
-a run that exits non-zero counts as failed. For `batch_sf0.1` each run's
-line names the query that set its `latency_tail_s` (the query whose fastest
-pass is nearest the reported tail), so a tail move can be attributed from
-the saved files alone. Each run lasts the
+a run that exits non-zero counts as failed. For `batch_sf0.1` the header
+and the printed line name the query that set the run's `latency_tail_s`
+(the query whose fastest pass is nearest the reported tail), so a tail
+move can be attributed from the saved files alone. Each run lasts the
 `run_seconds` of BENCHMARK.json. Then, for every end-to-end metric, it
 prints each side's median and quartiles, the change's wins (ties count for
 neither side), the parent's IQR, and whether the gain rule holds: the
@@ -44,9 +44,6 @@ def run(checkout, workload, seed, seconds, path):
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload, "--seed",
                         str(seed), "--seconds", str(seconds), "--trace", "0"],
                        cwd=checkout, capture_output=True, text=True)
-    header = f"load1_before={load1:.2f} exit={p.returncode} checkout={checkout}"
-    with open(path, "w") as f:
-        f.write(f"# {header}\n{p.stdout}")
     lines = p.stdout.strip().splitlines()
     try:
         res = json.loads(lines[-1]) if p.returncode == 0 else {}
@@ -57,15 +54,17 @@ def run(checkout, workload, seed, seconds, path):
     saved = os.path.splitext(path)[0] + ".jvm_result.json"
     if os.path.exists(saved):
         os.remove(saved)
-    tail = ""
+    header = f"load1_before={load1:.2f} exit={p.returncode} checkout={checkout}"
     if p.returncode == 0 and os.path.exists(jvm):
         shutil.copyfile(jvm, saved)
         if workload.startswith("batch") and "latency_tail_s" in metrics:
             name, t = tail_query(saved, metrics["latency_tail_s"])
-            tail = f" tail_query={name} ({t:.3f})"
+            header += f" tail_query={name} ({t:.3f})"
+    with open(path, "w") as f:
+        f.write(f"# {header}\n{p.stdout}")
     print(f"{os.path.basename(path)}: {header} correct={res.get('correct')} "
-          f"failed={res.get('failed')} " + " ".join(f"{k}={v:.3f}" for k, v in metrics.items())
-          + tail, flush=True)
+          f"failed={res.get('failed')} " + " ".join(f"{k}={v:.3f}" for k, v in metrics.items()),
+          flush=True)
     return dict(res, metrics=metrics)
 
 
